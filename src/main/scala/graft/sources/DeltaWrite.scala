@@ -101,172 +101,105 @@ object DeltaWrite {
       case _ => None
     }
 
-  /** Stage df's rows as parquet files in the table's standard partition
-    * layout; returns (relativePath, partitionValues, statsJson) per
-    * written file. Stats are the protocol's data-skipping JSON
-    * (numRecords / minValues / maxValues / nullCount over the supported
-    * data columns — timestamps ISO-8601 UTC at full microseconds, never
-    * truncated, so max bounds stay exact), computed by one aggregation
-    * over the staging dir before the move. */
-  private def stageFiles(df: DataFrame, table: String,
-      partitionBy: Seq[String]): Seq[(String, Map[String, String], Option[String])] = {
-    val stage = Files.createTempDirectory("graft_delta_write").toString
-    // HASH-DISTRIBUTE by the partition columns before a dynamic-partition
-    // write (round-19 optimization, guide §6 — the same move as Iceberg's
-    // write.distribution-mode=hash): without it every input task writes
-    // into EVERY partition dir it sees rows for — a single-task upstream
-    // (one-row-group parquet) wrote ~19k partition dirs SEQUENTIALLY
-    // (~290 s measured on a day×bucket composite at sf0.1). Distributed,
-    // each partition value is written by one task, in parallel, one file
-    // per partition dir per append. A heavily-skewed single partition
-    // value serializes on its one writer — the old path had the opposite
-    // (and worse) pathology. NUMBERED repartition deliberately: the
-    // column-only form is AQE-coalescible, and a few-MB staging shuffle
-    // coalesces to ONE partition (measured — the single sequential writer
-    // came straight back); a user-specified number is exempt.
-    val distributed =
-      if (partitionBy.isEmpty) df
-      else df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-        partitionBy.map(org.apache.spark.sql.functions.col): _*)
-    val writer = distributed.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer).parquet(stage)
-    // an empty PARTITIONED write lays down no part file at all (there is
-    // no partition value to write under) — nothing staged, and the stats
-    // read-back below would fail schema inference on the empty dir. The
-    // schema-only commit (CREATE TABLE (schema), ADD COLUMN) rides on the
-    // metadata action alone.
-    def anyParquet(dir: java.io.File): Boolean =
-      Option(dir.listFiles()).getOrElse(Array.empty).exists {
-        case d if d.isDirectory => anyParquet(d)
-        case f => f.getName.endsWith(".parquet")
-      }
+  /** Write `df`'s rows as data files under the table root through
+    * [[DataFileWriter]] and return one add action per file. Partitioned
+    * writes lay out one `c=v/` directory level per partition column and
+    * keep the partition columns out of the file contents. Each add records
+    * the value as the string Spark's `partitionBy` renders (session time
+    * zone), NULL and '' as JSON null. Directory names are percent-encoded,
+    * so they stay ASCII whatever the JVM's file-name encoding; NULL and ''
+    * go under Spark's `__HIVE_DEFAULT_PARTITION__`. `recordValues = false`
+    * (the graft bucket layout) keeps the `__gb=k/` directory but records
+    * no values.
+    *
+    * Each add carries the protocol's data-skipping stats, computed by the
+    * write tasks ([[statsJson]]). Files land under the table root before
+    * the commit claim: a failed write or a commit that gives up leaves
+    * unreferenced files, which [[vacuum]] reclaims. */
+  private def writeFiles(df: DataFrame, table: String, partitionBy: Seq[String],
+      dataChange: Boolean = true, recordValues: Boolean = true): Seq[String] = {
     // persisted per-file blooms: the table opts in via the
     // `graft.bloom.columns` property (ALTER TABLE … SET BLOOM FILTER) —
     // point/IN predicates on high-NDV columns then prune where [min,max]
-    // spans the whole domain. Config names LOGICAL columns; the staged
+    // spans the whole domain. Config names LOGICAL columns; the written
     // frame speaks physical under column mapping, so translate here.
     val bloomCols: Seq[String] = scala.util.Try {
       val snap = DeltaRead.snapshotInfo(df.sparkSession, table)
       snap.configuration.get("graft.bloom.columns").toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
         .map(snap.physicalName)
-    }.getOrElse(Nil).filter(df.columns.contains)
-    val statsByPath =
-      if (!anyParquet(new java.io.File(stage))) Map.empty[String, String]
-      else collectFileStats(df.sparkSession, stage,
-        df.schema.fields.toSeq.filterNot(f => partitionBy.contains(f.name))
-          .filter(f => DeltaRead.statsSupported(f.dataType)), bloomCols)
-
-    def walk(dir: java.io.File, values: Map[String, String]): Seq[(java.io.File, Map[String, String])] =
-      Option(dir.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
-        case d if d.isDirectory && d.getName.contains("=") =>
-          val Array(k, v) = d.getName.split("=", 2)
-          walk(d, values + (k -> DeltaRead.pctDecode(v)))
-        case f if f.isFile && f.getName.endsWith(".parquet") => Seq(f -> values)
-        case _ => Seq.empty
-      }
-    val moved = walk(new java.io.File(stage), Map.empty).flatMap { case (f, values) =>
-      statsByPath.get(f.toPath.toRealPath().toString) match {
-        // 0-row part file (empty upstream partition / empty overwrite):
-        // forms no aggregation group — skip it, same as the Iceberg stager
-        case None => None
-        case stats =>
-          // standard layout: partition dirs at the table root; path
-          // segments percent-encoded in the log exactly as the disk name
-          val partDirs = partitionBy.map { c =>
-            s"$c=${pctEncode(values.getOrElse(c, ""))}"
-          }
-          val rel = (partDirs :+ f.getName).mkString("/")
-          val dest = Paths.get(table, rel)
-          Files.createDirectories(dest.getParent)
-          Files.move(f.toPath, dest)
-          Some((rel, values, stats))
-      }
+    }.getOrElse(Nil)
+    val dataCols = df.columns.toSeq.filterNot(partitionBy.contains)
+    DataFileWriter.write(df, table, Some(dataCols),
+      keys = partitionBy.map(c => col(c).cast(org.apache.spark.sql.types.StringType)),
+      keyPrefix = vals => partitionBy.zip(vals).map {
+        case (c, null | "") => s"${pctEncode(c)}=__HIVE_DEFAULT_PARTITION__/"
+        case (c, v) => s"${pctEncode(c)}=${pctEncode(v.toString)}/"
+      }.mkString,
+      statColumns = dataCols.filter(c => DeltaRead.statsSupported(df.schema(c).dataType)),
+      bloomColumns = bloomCols.filter(dataCols.contains)
+    ).map { f =>
+      val values =
+        if (!recordValues) Map.empty[String, String]
+        else partitionBy.zip(f.keys).map { case (c, v) =>
+          c -> Option(v).map(_.toString).filter(_.nonEmpty).orNull
+        }.toMap
+      addAction(pctEncodePath(f.rel), values, f.bytes, dataChange, statsJson(f))
     }
-    // the staging dir now holds only _SUCCESS/metadata leftovers — drop it
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr)
-      f.delete()
-    }
-    rmr(new java.io.File(stage))
-    moved
   }
 
-  /** One agg job over a staged write: per-file protocol stats JSON keyed
-    * by the file's absolute real path. `bloomFields` adds a per-file
-    * xxhash64(seed 42) bloom sketch per named column under the extended
-    * `graftBloom` stats key (base64; stock readers ignore unknown keys). */
-  private def collectFileStats(spark: SparkSession, stage: String,
-      statFields: Seq[org.apache.spark.sql.types.StructField],
-      bloomFields: Seq[String] = Nil): Map[String, String] = {
-    import org.apache.spark.sql.functions.{col => fcol, count => fcount, input_file_name, lit => flit, max => fmax, min => fmin, sum => fsum, when => fwhen, xxhash64}
-    // statFields may be empty (no supported columns): still aggregate the
-    // count — a file ABSENT from the result is exactly a 0-row part file,
-    // which stageFiles uses to skip committing empties
-    val aggs = (fcount(flit(1)).as("__n") +: statFields.flatMap(f => Seq(
-      fmin(fcol(f.name)).as(s"__mn_${f.name}"), fmax(fcol(f.name)).as(s"__mx_${f.name}"),
-      fsum(fwhen(fcol(f.name).isNull, flit(1L)).otherwise(flit(0L))).as(s"__nl_${f.name}")))) ++
-      bloomFields.map(c => graft.operators.BloomOps
-        .bloomAgg(xxhash64(fcol(c)), 1000000L, 1024L * 1024).as(s"__bl_$c"))
+  /** One written file's protocol stats JSON: numRecords / minValues /
+    * maxValues / nullCount over its stats columns — timestamps ISO-8601
+    * UTC at full microseconds, never truncated, so max bounds stay exact —
+    * plus, for bloom columns, an xxhash64 (seed 42) sketch per column under
+    * the extended `graftBloom` key (base64; stock readers ignore unknown
+    * keys). */
+  private[sources] def statsJson(f: DataFileWriter.WrittenFile): String = {
+    import com.fasterxml.jackson.databind.JsonNode
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def jsonValue(dt: org.apache.spark.sql.types.DataType, v: Any): com.fasterxml.jackson.databind.JsonNode = {
-      val nf = om.getNodeFactory
-      dt match {
-        case org.apache.spark.sql.types.BooleanType => nf.booleanNode(v.asInstanceOf[Boolean])
-        case org.apache.spark.sql.types.IntegerType => nf.numberNode(v.asInstanceOf[Int])
-        case org.apache.spark.sql.types.LongType => nf.numberNode(v.asInstanceOf[Long])
-        case org.apache.spark.sql.types.FloatType => nf.numberNode(v.asInstanceOf[Float])
-        case org.apache.spark.sql.types.DoubleType => nf.numberNode(v.asInstanceOf[Double])
-        case org.apache.spark.sql.types.StringType => nf.textNode(v.asInstanceOf[String])
-        case org.apache.spark.sql.types.DateType => nf.textNode(v.toString)
-        case org.apache.spark.sql.types.TimestampType =>
-          val i = v.asInstanceOf[java.sql.Timestamp].toInstant
-          nf.textNode(java.time.format.DateTimeFormatter
-            .ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
-            .withZone(java.time.ZoneOffset.UTC).format(i))
-        case other => throw new IllegalArgumentException(s"no stats encoding for $other")
+    val nf = om.getNodeFactory
+    def jsonValue(v: Any): JsonNode = v match {
+      case b: Boolean => nf.booleanNode(b)
+      case i: Int => nf.numberNode(i)
+      case l: Long => nf.numberNode(l)
+      case x: Float => nf.numberNode(x)
+      case d: Double => nf.numberNode(d)
+      case s: String => nf.textNode(s)
+      case t: java.sql.Timestamp =>
+        nf.textNode(java.time.format.DateTimeFormatter
+          .ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
+          .withZone(java.time.ZoneOffset.UTC).format(t.toInstant))
+      case d @ (_: java.sql.Date | _: java.time.LocalDate) => nf.textNode(d.toString)
+      case other => throw new IllegalArgumentException(s"no stats encoding for $other")
+    }
+    val root = om.createObjectNode()
+    root.put("numRecords", f.rows)
+    val (mins, maxs, nulls) =
+      (root.putObject("minValues"), root.putObject("maxValues"), root.putObject("nullCount"))
+    f.stats.foreach { s =>
+      if (s.min != null) mins.set[JsonNode](s.name, jsonValue(s.min))
+      if (s.max != null) maxs.set[JsonNode](s.name, jsonValue(s.max))
+      nulls.put(s.name, s.nulls)
+    }
+    if (f.blooms.nonEmpty) {
+      val blooms = root.putObject("graftBloom")
+      f.blooms.foreach { case (c, blob) =>
+        blooms.put(c, java.util.Base64.getEncoder.encodeToString(blob))
       }
     }
-    spark.read.parquet(stage)
-      .groupBy(input_file_name().as("__f")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val root = om.createObjectNode()
-        root.put("numRecords", r.getAs[Long]("__n"))
-        val (mins, maxs, nulls) =
-          (root.putObject("minValues"), root.putObject("maxValues"), root.putObject("nullCount"))
-        statFields.foreach { f =>
-          val mn = r.getAs[Any](s"__mn_${f.name}")
-          val mx = r.getAs[Any](s"__mx_${f.name}")
-          if (mn != null) mins.set[com.fasterxml.jackson.databind.JsonNode](f.name, jsonValue(f.dataType, mn))
-          if (mx != null) maxs.set[com.fasterxml.jackson.databind.JsonNode](f.name, jsonValue(f.dataType, mx))
-          nulls.put(f.name, r.getAs[Long](s"__nl_${f.name}"))
-        }
-        if (bloomFields.nonEmpty) {
-          val blooms = root.putObject("graftBloom")
-          bloomFields.foreach { c =>
-            val blob = r.getAs[Array[Byte]](s"__bl_$c")
-            if (blob != null)
-              blooms.put(c, java.util.Base64.getEncoder.encodeToString(blob))
-          }
-        }
-        // input_file_name is a Hadoop-Path URI string: percent-escapes in
-        // it are ENCODING (space → %20, % → %25), not disk characters —
-        // decode once to recover the literal on-disk name (Hive only
-        // escapes its own reserved set, so e.g. spaces are literal on disk)
-        val full = DeltaRead.pctDecode(
-          new org.apache.hadoop.fs.Path(r.getAs[String]("__f")).toUri.getPath)
-        java.nio.file.Paths.get(full).toRealPath().toString -> om.writeValueAsString(root)
-      }.toMap
+    om.writeValueAsString(root)
   }
+
+  /** `partitionValues` object of an add action; a null value is JSON null. */
+  private def pvJson(values: Iterable[(String, String)]): String =
+    values.map { case (k, v) => s"${jsonStr(k)}:${if (v == null) "null" else jsonStr(v)}" }
+      .mkString("{", ",", "}")
 
   private def addAction(rel: String, values: Map[String, String], size: Long,
-      dataChange: Boolean = true, stats: Option[String] = None): String = {
-    val pv = values.map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }.mkString("{", ",", "}")
-    val st = stats.map(s => s""","stats":${jsonStr(s)}""").getOrElse("")
-    s"""{"add":{"path":${jsonStr(rel)},"partitionValues":$pv,"size":$size,""" +
-      s""""modificationTime":${System.currentTimeMillis()},"dataChange":$dataChange$st}}"""
-  }
+      dataChange: Boolean, stats: String): String =
+    s"""{"add":{"path":${jsonStr(rel)},"partitionValues":${pvJson(values)},"size":$size,""" +
+      s""""modificationTime":${System.currentTimeMillis()},"dataChange":$dataChange,""" +
+      s""""stats":${jsonStr(stats)}}}"""
 
   /** `,"deletionVector":{...}` fragment of an add action (empty offset
     * elided — inline DVs carry none). */
@@ -431,12 +364,7 @@ object DeltaWrite {
           org.apache.spark.sql.functions.lit(0)))
       stageParts = Seq("__gb")
     }
-    val staged = stageFiles(stageDf, table, stageParts)
-    val adds = staged.map { case (rel, values, stats) =>
-      addAction(pctEncodePath(rel),
-        if (bucketSpec.isDefined) Map.empty[String, String] else values,
-        Files.size(Paths.get(table, rel)), stats = stats)
-    }
+    val adds = writeFiles(stageDf, table, stageParts, recordValues = bucketSpec.isEmpty)
     val header =
       if (exists) evolvedMeta.toSeq
       else Seq(protocolAction, metaAction(df.schema, declaredParts, newTableId(),
@@ -477,10 +405,7 @@ object DeltaWrite {
     enforceConstraints(snapAtCheck, df)
     val (sdf, sparts) =
       if (mapped) toPhysical(snapAtCheck, df) else (df, partitionBy)
-    val staged = stageFiles(sdf, table, sparts)
-    val adds = staged.map { case (rel, values, stats) =>
-      addAction(pctEncodePath(rel), values, Files.size(Paths.get(table, rel)), stats = stats)
-    }
+    val adds = writeFiles(sdf, table, sparts)
     while (true) {
       val snap = DeltaRead.snapshotInfo(spark, table)
       val removes = snap.files.map { f =>
@@ -581,10 +506,7 @@ object DeltaWrite {
       s"replaceWhere: $strays incoming row(s) do not satisfy '$where' — rows " +
         "outside the replaced scope would duplicate their live copies")
     val (sdf, sparts) = toPhysical(snap0, df)
-    val staged = stageFiles(sdf, table, sparts)
-    val adds = staged.map { case (rel, values, stats) =>
-      addAction(pctEncodePath(rel), values, Files.size(Paths.get(table, rel)), stats = stats)
-    }
+    val adds = writeFiles(sdf, table, sparts)
     // the replacement was computed against snap0's state — files another
     // writer commits INTO the replaced scope after that are rows the
     // caller never saw, and silently removing them would be last-writer-
@@ -652,10 +574,7 @@ object DeltaWrite {
         }: _*)
         enforceConstraints(snap0, updated)
         val (sUpd, sParts) = toPhysical(snap0, updated)
-        val staged = stageFiles(sUpd, table, sParts)
-        val adds = staged.map { case (rel, values, stats) =>
-          addAction(pctEncodePath(rel), values, Files.size(Paths.get(table, rel)), stats = stats)
-        }
+        val adds = writeFiles(sUpd, table, sParts)
         commitDvGuarded(spark, table, (dvActions ++ adds).mkString("", "\n", "\n"),
           dvAt0, affectedPaths)
     }
@@ -744,8 +663,8 @@ object DeltaWrite {
             bits = math.min(12, 62 / zorderBy.length))
         else if (zorderBy.nonEmpty) graft.operators.Layout.zcluster(df, zorderBy, nOut)
         else if (bucketSpec.isDefined) {
-          // recompute the ordinal and bring each bucket's rewritten rows
-          // into one task — one compacted file per (task, bucket)
+          // recompute the ordinal; the writer distributes by it, so each
+          // bucket's rewritten rows become one compacted file
           val (n, key) = bucketSpec.get
           require(!snap.schema.fieldNames.contains("__gb"),
             "bucketed Delta compact: column name '__gb' is reserved for " +
@@ -754,21 +673,16 @@ object DeltaWrite {
           df.withColumn("__gb", org.apache.spark.sql.functions.coalesce(
             IcebergTransforms.Bucket(n, key).column(fcol(key), dt),
             org.apache.spark.sql.functions.lit(0)))
-            .repartition(math.max(1, math.min(nOut, n)), fcol("__gb"))
         }
-        else if (snap.partitionColumns.nonEmpty)
-          df.repartition(nOut, snap.partitionColumns.map(fcol): _*)
+        // partitioned: the writer distributes by the partition values —
+        // one compacted file per partition
+        else if (snap.partitionColumns.nonEmpty) df
         else df.repartition(nOut)
       val (sPacked, sParts) =
         if (bucketSpec.isDefined) (packed, Seq("__gb")) // mapping is none
         else toPhysical(snap, packed)
-      val staged = stageFiles(sPacked, table, sParts)
-      val adds = staged.map { case (rel, values, stats) =>
-        addAction(pctEncodePath(rel),
-          if (bucketSpec.isDefined) Map.empty[String, String] else values,
-          Files.size(Paths.get(table, rel)),
-          dataChange = false, stats = stats)
-      }
+      val adds = writeFiles(sPacked, table, sParts, dataChange = false,
+        recordValues = bucketSpec.isEmpty)
       val removes = candidates.map { f =>
         removeAction(pctEncodePath(f.path.stripPrefix(s"${table.stripSuffix("/")}/")),
           dataChange = false)
@@ -776,7 +690,7 @@ object DeltaWrite {
       if (tryCommitAt(table, snap.version + 1,
           (removes ++ adds).mkString("", "\n", "\n")))
         return snap.version + 1
-      // lost the race: newly staged files stay unreferenced (vacuum debt),
+      // lost the race: newly written files stay unreferenced (vacuum debt),
       // correctness re-derives from the fresh snapshot next iteration
     }
     -1L // unreachable
@@ -790,7 +704,9 @@ object DeltaWrite {
     * (`retainLastVersions`, default 1 = current only), the same contract
     * as the wall-clock retention production Delta uses: time travel (and
     * adds-only reads whose range starts) BEFORE the horizon fail after a
-    * vacuum — by design, and loudly (missing files).
+    * vacuum — by design, and loudly (missing files). It also reclaims
+    * the orphans of failed or abandoned writes, whose files land under the
+    * table root before any commit claim ([[DataFileWriter]]).
     *
     * Only files a Delta writer lays down are candidates (`*.parquet`
     * data, `deletion_vector_*.bin`); `_delta_log` is never touched, and
@@ -1010,11 +926,8 @@ object DeltaWrite {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }
-      val pvJson = partitionBy.map { c =>
-        val v = pv(c)
-        s"${jsonStr(c)}:${if (v == null) "null" else jsonStr(v)}"
-      }.mkString("{", ",", "}")
-      s"""{"add":{"path":${jsonStr(pctEncodePath(rel))},"partitionValues":$pvJson,""" +
+      s"""{"add":{"path":${jsonStr(pctEncodePath(rel))},""" +
+        s""""partitionValues":${pvJson(partitionBy.map(c => c -> pv(c)))},""" +
         s""""size":${f.length},"modificationTime":${f.lastModified},"dataChange":true,""" +
         s""""stats":${jsonStr(s"""{"numRecords":$n}""")}}}"""
     }
@@ -1123,11 +1036,8 @@ object DeltaWrite {
           removeAction(rel(f.path), dataChange = true))
       val adds =
         (tgt.files.filterNot(f => nowBy.contains(f.path)) ++ dvChanged).map { f =>
-          val pv = f.partitionValues.map { case (k, v) =>
-            s"${jsonStr(k)}:${if (v == null) "null" else jsonStr(v)}"
-          }.mkString("{", ",", "}")
           val st = f.stats.map(s => s""","stats":${jsonStr(s)}""").getOrElse("")
-          s"""{"add":{"path":${jsonStr(rel(f.path))},"partitionValues":$pv,""" +
+          s"""{"add":{"path":${jsonStr(rel(f.path))},"partitionValues":${pvJson(f.partitionValues)},""" +
             s""""size":${f.size},"modificationTime":${f.modificationTime},""" +
             s""""dataChange":true$st${f.dv.map(dvActionJson).getOrElse("")}}}"""
         }
@@ -1184,9 +1094,6 @@ object DeltaWrite {
         """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
       else protocolAction
     val adds = snap.files.map { f =>
-      val pv = f.partitionValues.map { case (k, v) =>
-        s"${jsonStr(k)}:${if (v == null) "null" else jsonStr(v)}"
-      }.mkString("{", ",", "}")
       val st = f.stats.map(s => s""","stats":${jsonStr(s)}""").getOrElse("")
       val dv = f.dv.map { d =>
         dvActionJson(d.storageType match {
@@ -1197,7 +1104,7 @@ object DeltaWrite {
             offset = d.offset)
         })
       }.getOrElse("")
-      s"""{"add":{"path":${jsonStr(pctEncodePath(f.path))},"partitionValues":$pv,""" +
+      s"""{"add":{"path":${jsonStr(pctEncodePath(f.path))},"partitionValues":${pvJson(f.partitionValues)},""" +
         s""""size":${f.size},"modificationTime":${f.modificationTime},""" +
         s""""dataChange":true$st$dv}}"""
     }
@@ -1230,7 +1137,7 @@ object DeltaWrite {
         case _ => Seq.empty
       }
     // AGE GRACE (stock Delta's retention-duration rule, default 24 h): a
-    // concurrent writer stages data files into the table dir BEFORE
+    // concurrent writer writes data files into the table dir BEFORE
     // claiming its commit; an unreferenced-but-fresh file may be exactly
     // such an in-flight add, and deleting it would corrupt the winner's
     // table. Only files older than the grace window are reclaimable —
@@ -1325,9 +1232,6 @@ object DeltaWrite {
       }
     val actions = protoUp ++ withDescriptors.flatMap { case (f, d) =>
       val rel = pctEncodePath(f.path.stripPrefix(s"${table.stripSuffix("/")}/"))
-      val pv = f.partitionValues.map { case (k, v) =>
-        s"${jsonStr(k)}:${if (v == null) "null" else jsonStr(v)}"
-      }.mkString("{", ",", "}")
       val off = d.offset.get
       // stats carried VERBATIM through the DV re-add: a deletion vector
       // never touches the physical file, so numRecords stays the physical
@@ -1335,7 +1239,7 @@ object DeltaWrite {
       val st = f.stats.map(s => s""","stats":${jsonStr(s)}""").getOrElse("")
       Seq(
         s"""{"remove":{"path":${jsonStr(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true}}""",
-        s"""{"add":{"path":${jsonStr(rel)},"partitionValues":$pv,"size":${f.size},""" +
+        s"""{"add":{"path":${jsonStr(rel)},"partitionValues":${pvJson(f.partitionValues)},"size":${f.size},""" +
           s""""modificationTime":${f.modificationTime},"dataChange":true$st,""" +
           s""""deletionVector":{"storageType":"u","pathOrInlineDv":${jsonStr(d.pathOrInlineDv)},""" +
           s""""offset":$off,"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}}}""")
@@ -1401,10 +1305,7 @@ object DeltaWrite {
     val plan = dvDeletePlan(spark, table, snap0, matched)
 
     val (sdf, sparts) = toPhysical(snap0, df)
-    val staged = stageFiles(sdf, table, sparts)
-    val adds = staged.map { case (rel, values, stats) =>
-      addAction(pctEncodePath(rel), values, Files.size(Paths.get(table, rel)), stats = stats)
-    }
+    val adds = writeFiles(sdf, table, sparts)
     plan match {
       case None => // pure insert: no DV guard needed, adds commute
         val content = adds.mkString("", "\n", "\n")
@@ -1457,10 +1358,7 @@ object DeltaWrite {
       .select(col("_file"), col("_pos"))
     val plan = dvDeletePlan(spark, table, snap0, matched)
     val (sIns, sParts) = toPhysical(snap0, inserts)
-    val staged = stageFiles(sIns, table, sParts)
-    val adds = staged.map { case (rel, values, stats) =>
-      addAction(pctEncodePath(rel), values, Files.size(Paths.get(table, rel)), stats = stats)
-    }
+    val adds = writeFiles(sIns, table, sParts)
     // optional high-water mark ((appId, version) txn action) riding the
     // SAME commit — sync bookkeeping is atomic with the apply
     val txnActions = txn.toSeq.map { case (appId, v) =>

@@ -191,23 +191,21 @@ object IcebergWrite {
 
   /** Attach per-column stats (by field id) to a data_file record: null
     * counts always, lower/upper bounds only for columns with a non-null
-    * min/max. `stats` is column-name-keyed (min, max, nulls). */
+    * min/max. */
   private def putBounds(dfr: org.apache.avro.generic.GenericRecord,
       dataFileSchema: org.apache.avro.Schema,
-      stats: Map[String, (Any, Any, Long)],
+      stats: Seq[DataFileWriter.ColumnStats],
       fieldIds: Map[String, Int],
       types: Map[String, DataType]): Unit = {
-    val known = stats.toSeq.flatMap { case (c, s) =>
-      fieldIds.get(c).map(id => (c, id, s))
-    }.sortBy(_._2)
+    val known = stats.flatMap(s => fieldIds.get(s.name).map(id => (s, id))).sortBy(_._2)
     if (known.isEmpty) return
     dfr.put("null_value_counts", kvList(dataFileSchema.getField("null_value_counts").schema(),
-      known.map { case (_, id, (_, _, n)) => id -> (n: Any) }))
-    val lower = known.collect { case (c, id, (mn, _, _)) if mn != null =>
-      id -> (java.nio.ByteBuffer.wrap(IcebergBounds.encode(types(c), mn)): Any)
+      known.map { case (s, id) => id -> (s.nulls: Any) }))
+    val lower = known.collect { case (s, id) if s.min != null =>
+      id -> (java.nio.ByteBuffer.wrap(IcebergBounds.encode(types(s.name), s.min)): Any)
     }
-    val upper = known.collect { case (c, id, (_, mx, _)) if mx != null =>
-      id -> (java.nio.ByteBuffer.wrap(IcebergBounds.encode(types(c), mx)): Any)
+    val upper = known.collect { case (s, id) if s.max != null =>
+      id -> (java.nio.ByteBuffer.wrap(IcebergBounds.encode(types(s.name), s.max)): Any)
     }
     if (lower.nonEmpty)
       dfr.put("lower_bounds", kvList(dataFileSchema.getField("lower_bounds").schema(), lower))
@@ -273,147 +271,48 @@ object IcebergWrite {
     mlPath
   }
 
-  /** Stage `df` as data files under `data/`: evaluate each transform into
-    * a `__p_*` column and partitionBy those — hive dirs split files per
-    * transform value while the REAL columns stay inside the files
-    * (Iceberg data files carry all columns; no reader-side injection
-    * needed). Exact per-file record counts AND typed per-file partition
-    * values AND per-file column min/max/null stats in ONE job — a real
-    * Iceberg reader trusts record_count, prunes on the partition record
-    * and on the bounds maps, so wrong values would corrupt its scan.
-    * Returns (moved path, row count, partition values, column stats) per
-    * file. */
-  private def stageDataFiles(spark: SparkSession, df0: DataFrame, table: String,
+  /** Absolute `data/` directory, created on first use — the base every
+    * data and delete file is written under. */
+  private def dataBase(table: String): String = {
+    Files.createDirectories(dataDir(table))
+    dataDir(table).toAbsolutePath.normalize.toString
+  }
+
+  /** Write `df` as data files flat under data/ through [[DataFileWriter]]:
+    * one pass, each file described by the task that wrote it. The table's
+    * Iceberg field ids are stamped into the parquet columns (id-based
+    * resolution is what survives renames). Partitioned writes key on each
+    * transform cast to its declared result type, so every file holds one
+    * partition value and carries the typed partition record (dates as the
+    * spec's epoch days); a real Iceberg reader trusts record_count and
+    * prunes on the partition record and the bounds, so these must be exact.
+    * Stats cover every bounds-supported column. Opted-in bloom columns
+    * (`graft.bloom.columns`) land in a sidecar json under metadata/ — the
+    * manifest avro schema has no bloom slot. */
+  private def writeDataFiles(df0: DataFrame, table: String,
       transforms: Seq[IcebergTransforms.Transform],
       partTypes: Seq[(String, DataType)],
-      fieldIds: Map[String, Int] = Map.empty)
-      : Seq[(java.nio.file.Path, Long, Seq[Any], Map[String, (Any, Any, Long)])] = {
-    import org.apache.spark.sql.functions.{col => fcol, count => fcount, first => ffirst, input_file_name, lit => flit}
-    // stamp the table's Iceberg field ids into the parquet columns
-    // (parquet.field.id metadata + the default-on fieldId writer): id-based
-    // resolution is what survives column renames, and any real engine's
-    // files carry ids — ours now do too
+      fieldIds: Map[String, Int]): Seq[DataFileWriter.WrittenFile] = {
+    import org.apache.spark.sql.functions.{col => fcol}
     val df = stampFieldIds(df0, fieldIds)
-    // PARTITIONED writes take the round-20 single-pass path: files land
-    // under data/ directly and per-file stats ride the write tasks — the
-    // staged `partitionBy` + full readback + move planned THREE passes
-    // over the data (write, re-read for stats, driver move) and its
-    // per-file overhead dominated many-partition appends (guide §1.2/§6;
-    // measured on the 19,200-dir day×bucket composite: 92 s → see
-    // OPTIMIZATION_r20.md). Unpartitioned writes keep the plain staged
-    // write (few files; nothing to gain).
-    if (transforms.nonEmpty)
-      return writeDataFilesDirect(spark, df, table, transforms, partTypes)
-    // UNPARTITIONED remainder: plain staged write, one stats readback,
-    // move under data/ — few files, nothing the single-pass path would
-    // improve.
-    val stage = Files.createTempDirectory("graft_iceberg_write")
-    // phase log (stderr, opt-in): keep the staged phases attributable
-    val phaseLog = sys.props.get("graft.write.phaseLog").contains("true") ||
-      sys.env.get("GRAFT_WRITE_PHASELOG").contains("true")
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (phaseLog) {
-      val now = System.nanoTime()
-      System.err.println(f"[iceberg-write] $name ${(now - tPhase) / 1e6}%.0f ms")
-      tPhase = now
-    }
-    df.write.mode("overwrite").parquet(stage.toString)
-    phase("stage-write")
-    Files.createDirectories(dataDir(table))
-
-    // an empty write may stage no part file at all: nothing to read back
-    // or move — the schema-only commit (CREATE TABLE (schema), ADD
-    // COLUMN) carries just the evolved metadata
-    def anyStaged(dir: java.io.File): Boolean =
-      Option(dir.listFiles()).getOrElse(Array.empty).exists {
-        case d if d.isDirectory => anyStaged(d)
-        case f => f.getName.endsWith(".parquet")
-      }
-    if (!anyStaged(stage.toFile)) {
-      def rmr0(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr0); f.delete()
-      }
-      rmr0(stage.toFile)
-      return Seq.empty
-    }
-
-    val readBack = spark.read.parquet(stage.toString)
-    // per-file column stats ride the SAME aggregation job as the row count
-    // and partition values: min/max/null-count for every bounds-supported
-    // data column, destined for the manifest's lower/upper_bounds maps
-    val statCols = df.schema.fields.toSeq
-      .filter(f => IcebergBounds.supported(f.dataType)).map(_.name)
-    // per-file bloom sketches (opt-in via `graft.bloom.columns` table
-    // property) ride the same job; they land in a SIDECAR json under
-    // metadata/ — the manifest avro schema has no bloom slot
     val bloomCols: Seq[String] = scala.util.Try {
       readPrior(table).flatMap(p => Option(p.get("properties")))
         .map(_.path("graft.bloom.columns").asText("")).getOrElse("")
     }.getOrElse("").split(",").map(_.trim).filter(_.nonEmpty).toSeq
       .filter(df.columns.contains)
-    val aggCols = (Seq(fcount(flit(1)).as("n")) ++ statCols.flatMap(c => Seq(
-      org.apache.spark.sql.functions.min(fcol(c)).as(s"__mn_$c"),
-      org.apache.spark.sql.functions.max(fcol(c)).as(s"__mx_$c"),
-      org.apache.spark.sql.functions.sum(
-        org.apache.spark.sql.functions.when(fcol(c).isNull, flit(1L)).otherwise(flit(0L)))
-        .as(s"__nl_$c")))) ++
-      bloomCols.map(c => graft.operators.BloomOps
-        .bloomAgg(org.apache.spark.sql.functions.xxhash64(fcol(c)), 1000000L, 1024L * 1024)
-        .as(s"__bl_$c"))
-    // key by STAGE-RELATIVE path, not file name: partitionBy names files
-    // per task, and one task writing several partition dirs reuses the
-    // same name in each — a name-keyed map silently mixes their stats
-    val stageRoot = stage.toRealPath().toString
-    val aggRows = readBack
-      .groupBy(input_file_name().as("f")).agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-    phase("readback-stats")
-    def relOf(r: org.apache.spark.sql.Row): String = {
-      // decode Hadoop-Path URI escapes (space → %20 etc.) so the key
-      // matches the literal on-disk relative path the walk produces
-      val full = DeltaRead.pctDecode(
-        new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
-      full.stripPrefix(stageRoot).stripPrefix("/")
-    }
-    val perFile: Map[String, (Long, Seq[Any], Map[String, (Any, Any, Long)])] =
-      aggRows.map { r =>
-        val stats = statCols.map { c =>
-          c -> (r.getAs[Any](s"__mn_$c"), r.getAs[Any](s"__mx_$c"), r.getAs[Long](s"__nl_$c"))
-        }.toMap
-        (relOf(r), (r.getLong(1), Seq.empty[Any], stats))
-      }.toMap
-    val bloomsByRel: Map[String, Map[String, Array[Byte]]] =
-      if (bloomCols.isEmpty) Map.empty
-      else aggRows.map { r =>
-        relOf(r) -> bloomCols.flatMap(c =>
-          Option(r.getAs[Array[Byte]](s"__bl_$c")).map(c -> _)).toMap
-      }.toMap
-
-    def walk(dir: java.io.File): Seq[java.io.File] =
-      Option(dir.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
-        if (f.isDirectory) walk(f)
-        else if (f.getName.endsWith(".parquet")) Seq(f) else Seq.empty
-      }
-    val sidecar = Map.newBuilder[String, Map[String, Array[Byte]]]
-    val dataFiles = walk(stage.toFile).flatMap { f =>
-      val rel = stage.toRealPath().relativize(f.toPath.toRealPath()).toString
-      perFile.get(rel) match {
-        case None => None // 0-row part file (empty upstream partition): skip
-        case Some((n, values, stats)) =>
-          val dest = dataDir(table).resolve(s"${java.util.UUID.randomUUID()}-${f.getName}")
-          Files.move(f.toPath, dest)
-          bloomsByRel.get(rel).filter(_.nonEmpty)
-            .foreach(b => sidecar += dest.toRealPath().toString -> b)
-          Some((dest, n, values, stats))
-      }
-    }
-    writeBloomSidecar(table, sidecar.result())
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr); f.delete()
-    }
-    rmr(stage.toFile)
-    phase("walk-move-cleanup")
-    dataFiles
+    val written = DataFileWriter.write(df, dataBase(table),
+      keys = transforms.zip(partTypes).map { case (t, (_, dt)) =>
+        t.column(fcol(t.source), df.schema(t.source).dataType).cast(dt)
+      },
+      statColumns = df.schema.fields.toSeq
+        .filter(f => IcebergBounds.supported(f.dataType)).map(_.name),
+      bloomColumns = bloomCols)
+    writeBloomSidecar(table, written.filter(_.blooms.nonEmpty)
+      .map(w => w.path -> w.blooms.toMap).toMap)
+    written.map(w => w.copy(keys = w.keys.map {
+      case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
+      case v => v
+    }))
   }
 
   /** One bloom-sidecar json per written batch: `{"<abs file path>":
@@ -433,200 +332,6 @@ object IcebergWrite {
     val out = metaDir(table).resolve(
       s"blooms-${java.util.UUID.randomUUID()}.json")
     Files.writeString(out, om.writeValueAsString(root))
-  }
-
-  /** One written file's task-side record: the final path plus everything
-    * the manifest needs, computed DURING the write. External (java) value
-    * types, so the driver consumes them exactly as the readback rows. */
-  private case class WrittenFile(path: String, rows: Long, values: Seq[Any],
-      stats: Seq[(String, Any, Any, Long)], blooms: Seq[(String, Array[Byte])])
-
-  /** SINGLE-PASS partitioned write (round 20, guide §1.2/§6): hash-
-    * distribute by the transform columns, SORT within tasks so each
-    * partition value is one contiguous run, and write each run's parquet
-    * file DIRECTLY under data/ with Spark's own parquet OutputWriter —
-    * per-file record count, typed partition values, column min/max/null
-    * stats and bloom sketches all computed in the write task as rows
-    * stream through. Replaces three passes (staged partitionBy write →
-    * full readback aggregation → driver-side walk + move) with one.
-    *
-    * Semantics preserved from the staged path: one file per partition
-    * value per append (hash distribution puts a value in exactly one
-    * task; the sort makes it one run), files land flat under data/ with
-    * fresh UUID names, min/max use Spark's own sort orderings
-    * (TypeUtils.getInterpretedOrdering — NaN/UTF8 semantics identical to
-    * the old min()/max() aggregates), and bloom sketches insert
-    * xxhash64(col) per row exactly like BloomOps.bloomAgg. A failed task
-    * attempt can orphan UUID-named files under data/ — never referenced
-    * by any manifest (the commit only cites task results of the
-    * SUCCEEDED attempt), the same exposure the staged path's
-    * moved-then-failed-commit files already had. */
-  private def writeDataFilesDirect(spark: SparkSession, df: DataFrame,
-      table: String, transforms: Seq[IcebergTransforms.Transform],
-      partTypes: Seq[(String, DataType)])
-      : Seq[(java.nio.file.Path, Long, Seq[Any], Map[String, (Any, Any, Long)])] = {
-    import org.apache.spark.sql.functions.{col => fcol}
-    val phaseLog = sys.props.get("graft.write.phaseLog").contains("true") ||
-      sys.env.get("GRAFT_WRITE_PHASELOG").contains("true")
-    val tPhase0 = System.nanoTime()
-    val dupCols = transforms.map(t => s"__p_${t.fieldName}")
-    // cast to the declared result type — the staged path's readback did
-    // `cast(dt)` on recovery, so the recorded values stay byte-identical
-    val stagedDf = df.select(df.columns.map(fcol).toSeq ++
-      transforms.zip(partTypes).map { case (t, (_, dt)) =>
-        t.column(fcol(t.source), df.schema(t.source).dataType).cast(dt)
-          .as(s"__p_${t.fieldName}")
-      }: _*)
-    val distributed = stagedDf.repartition(
-        stagedDf.sparkSession.sparkContext.defaultParallelism,
-        dupCols.map(fcol): _*)
-      .sortWithinPartitions(dupCols.map(fcol): _*)
-    val fullSchema = distributed.schema
-    val nData = df.schema.length
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      fullSchema.fields.take(nData))
-    val statCols: Seq[(String, Int)] = dataSchema.fields.toSeq.zipWithIndex
-      .filter { case (f, _) => IcebergBounds.supported(f.dataType) }
-      .map { case (f, i) => (f.name, i) }
-    val bloomCols: Seq[(String, Int)] = scala.util.Try {
-      readPrior(table).flatMap(p => Option(p.get("properties")))
-        .map(_.path("graft.bloom.columns").asText("")).getOrElse("")
-    }.getOrElse("").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      .flatMap(c => dataSchema.fieldNames.zipWithIndex.find(_._1 == c))
-    val (factory, confBc) =
-      org.apache.spark.sql.graft.Bridge.parquetWriteSupport(spark, dataSchema)
-    Files.createDirectories(dataDir(table))
-    val dataDirStr = dataDir(table).toRealPath().toString
-    val partTypesLocal = partTypes
-    val statTypes = statCols.map { case (_, i) => dataSchema.fields(i).dataType }
-
-    val written: Array[WrittenFile] =
-      distributed.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        import org.apache.spark.sql.catalyst.InternalRow
-        import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow, XxHash64}
-        if (!it.hasNext) Iterator.empty
-        else {
-          val conf = confBc.value.value
-          val tac = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf,
-            new org.apache.hadoop.mapreduce.TaskAttemptID(
-              "graft", 0, org.apache.hadoop.mapreduce.TaskType.MAP, pid, 0))
-          val ext = factory.getFileExtension(tac)
-          val dataProj = UnsafeProjection.create(
-            dataSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-              BoundReference(i, f.dataType, f.nullable)
-            })
-          val keyProj = UnsafeProjection.create(
-            partTypesLocal.zipWithIndex.map { case ((_, dt), i) =>
-              BoundReference(nData + i, dt, nullable = true)
-            })
-          val orderings = statTypes.map(dt =>
-            org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt))
-          val statToExt = statTypes.map(dt =>
-            org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(dt))
-          val partToExt = partTypesLocal.map { case (_, dt) =>
-            org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(dt) }
-          // per-row xxhash64(col), seed 42 — the exact expression
-          // BloomOps.bloomAgg fed (hash of a NULL input is the seed, and
-          // the aggregate inserted it for every row — replicated)
-          val hashProjs = bloomCols.map { case (_, i) =>
-            val dt = dataSchema.fields(i).dataType
-            org.apache.spark.sql.graft.Bridge.createMutableProjection(Seq(
-              new XxHash64(Seq(BoundReference(i, dt, nullable = true)), 42L)))
-          }
-          val out = scala.collection.mutable.ArrayBuffer.empty[WrittenFile]
-          var writer: org.apache.spark.sql.execution.datasources.OutputWriter = null
-          var curKey: UnsafeRow = null
-          var curKeyRowVals: Seq[Any] = null
-          var path: String = null
-          var rows = 0L
-          var seq = 0
-          val mins = Array.ofDim[Any](statCols.size)
-          val maxs = Array.ofDim[Any](statCols.size)
-          val nulls = Array.ofDim[Long](statCols.size)
-          var blooms: Array[org.apache.spark.util.sketch.BloomFilter] = null
-          def open(row: InternalRow): Unit = {
-            path = s"$dataDirStr/${java.util.UUID.randomUUID()}-part-$pid-$seq$ext"
-            seq += 1
-            writer = factory.newInstance(path, dataSchema, tac)
-            rows = 0L
-            java.util.Arrays.fill(mins.asInstanceOf[Array[AnyRef]], null)
-            java.util.Arrays.fill(maxs.asInstanceOf[Array[AnyRef]], null)
-            java.util.Arrays.fill(nulls, 0L)
-            blooms =
-              if (bloomCols.isEmpty) null
-              else Array.fill(bloomCols.size)(
-                org.apache.spark.util.sketch.BloomFilter.create(1000000L, 1024L * 1024))
-            curKeyRowVals = partTypesLocal.zipWithIndex.map { case ((_, dt), i) =>
-              val idx = nData + i
-              if (row.isNullAt(idx)) null
-              else partToExt(i)(row.get(idx, dt)) match {
-                case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt // spec: epoch days
-                case v => v
-              }
-            }
-          }
-          def closeFile(): Unit = {
-            writer.close()
-            writer = null
-            out += WrittenFile(path, rows, curKeyRowVals,
-              statCols.zipWithIndex.map { case ((c, _), j) =>
-                (c, if (mins(j) == null) null else statToExt(j)(mins(j)),
-                  if (maxs(j) == null) null else statToExt(j)(maxs(j)), nulls(j))
-              },
-              if (blooms == null) Nil
-              else bloomCols.zipWithIndex.map { case ((c, _), j) =>
-                val bos = new java.io.ByteArrayOutputStream()
-                blooms(j).writeTo(bos)
-                (c, bos.toByteArray)
-              })
-          }
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit] { _ =>
-              if (writer != null) scala.util.Try(writer.close()) // failed task: release the stream
-            })
-          it.foreach { row =>
-            val k = keyProj(row)
-            if (curKey == null || k != curKey) {
-              if (writer != null) closeFile()
-              curKey = k.copy()
-              open(row)
-            }
-            writer.write(dataProj(row))
-            rows += 1
-            var j = 0
-            while (j < statCols.size) {
-              val idx = statCols(j)._2
-              if (row.isNullAt(idx)) nulls(j) += 1
-              else {
-                val v = row.get(idx, statTypes(j))
-                val ord = orderings(j)
-                if (mins(j) == null || ord.lt(v, mins(j)))
-                  mins(j) = InternalRow.copyValue(v)
-                if (maxs(j) == null || ord.gt(v, maxs(j)))
-                  maxs(j) = InternalRow.copyValue(v)
-              }
-              j += 1
-            }
-            var b = 0
-            while (b < bloomCols.size) {
-              blooms(b).putLong(hashProjs(b)(row).getLong(0))
-              b += 1
-            }
-          }
-          if (writer != null) closeFile()
-          out.iterator
-        }
-      }.collect()
-    if (phaseLog) System.err.println(
-      f"[iceberg-write] direct-write ${(System.nanoTime() - tPhase0) / 1e6}%.0f ms " +
-        s"(${written.length} files)")
-
-    writeBloomSidecar(table, written.filter(_.blooms.nonEmpty)
-      .map(w => w.path -> w.blooms.toMap).toMap)
-    written.toSeq.map { w =>
-      (Paths.get(w.path), w.rows, w.values,
-        w.stats.map { case (c, mn, mx, n) => c -> ((mn, mx, n)) }.toMap)
-    }
   }
 
   private def readPrior(table: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
@@ -931,14 +636,8 @@ object IcebergWrite {
         s"append partitioning $incoming does not match table's $priorParts")
     }
 
-    // 1. stage data files (spark parquet write → move under data/).
-    //    Partitioned: EVALUATE each transform into a __p_* column and
-    //    partitionBy those — hive dirs split files per transform value
-    //    while the REAL columns stay inside the files (Iceberg data files
-    //    carry all columns; no reader-side injection needed). Exact
-    //    per-file record counts AND typed per-file partition values in ONE
-    //    job — a real Iceberg reader trusts record_count and prunes on the
-    //    partition record, so wrong values would corrupt its scan.
+    // 1. write the data files under data/ in one pass (writeDataFiles),
+    //    the file ids below stamped into their parquet columns
     val stageIds: Map[String, Int] = priorAtCheck match {
       case Some(meta) =>
         val base = fieldIdMap(priorAtCheck)
@@ -952,8 +651,8 @@ object IcebergWrite {
       case None =>
         df.schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
     }
-    val dataFiles = stageDataFiles(spark, df, table, transforms, partTypes, stageIds)
-    val rowCount = dataFiles.map(_._2).sum
+    val dataFiles = writeDataFiles(df, table, transforms, partTypes, stageIds)
+    val rowCount = dataFiles.map(_.rows).sum
 
     // 2–5. manifest (status 1 = ADDED) + list + metadata via the shared
     // optimistic claim loop
@@ -1007,17 +706,17 @@ object IcebergWrite {
         val boundTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
         val dataFileSchema = schema.getField("data_file").schema()
         val partitionSchema = dataFileSchema.getField("partition").schema()
-        val entries = dataFiles.map { case (p, nRows, values, stats) =>
+        val entries = dataFiles.map { w =>
           val part = new GenericData.Record(partitionSchema)
-          partTypes.map(_._1).zip(values).foreach { case (c, v) => part.put(c, v) }
+          partTypes.map(_._1).zip(w.keys).foreach { case (c, v) => part.put(c, v) }
           val dfr = new GenericData.Record(dataFileSchema)
           dfr.put("content", 0)
-          dfr.put("file_path", p.toString)
+          dfr.put("file_path", w.path)
           dfr.put("file_format", "PARQUET")
           dfr.put("partition", part)
-          dfr.put("record_count", nRows)
-          dfr.put("file_size_in_bytes", Files.size(p))
-          putBounds(dfr, dataFileSchema, stats, boundIds, boundTypes)
+          dfr.put("record_count", w.rows)
+          dfr.put("file_size_in_bytes", w.bytes)
+          putBounds(dfr, dataFileSchema, w.stats, boundIds, boundTypes)
           val e = new GenericData.Record(schema)
           e.put("status", 1)
           e.put("snapshot_id", snapshotId)
@@ -1298,7 +997,6 @@ object IcebergWrite {
   private def compactOnce(spark: SparkSession, table: String,
       smallFileBytes: Long, targetFileBytes: Long, zorderBy: Seq[String],
       where: Option[String] = None, curve: String = "z"): Long = {
-    import org.apache.spark.sql.functions.{col => fcol}
     val base = currentVersion(table)
     require(base > 0, s"not an Iceberg table: $table")
     val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
@@ -1344,8 +1042,9 @@ object IcebergWrite {
           graft.operators.Layout.hilbertCluster(df, zorderBy, nOut,
             bits = math.min(12, 62 / zorderBy.length))
       else if (zorderBy.nonEmpty) graft.operators.Layout.zcluster(df, zorderBy, nOut)
-      else if (transforms.nonEmpty)
-        df.repartition(nOut, transforms.map(t => fcol(t.source)): _*)
+      // partitioned: the writer distributes by the partition values — one
+      // compacted file per partition
+      else if (transforms.nonEmpty) df
       else df.repartition(nOut)
     val partTypes: Seq[(String, DataType)] =
       transforms.map(t => t.fieldName -> t.resultType(df.schema(t.source).dataType))
@@ -1354,7 +1053,7 @@ object IcebergWrite {
       schemasJson = carriedSchemas,
       specsJson = carriedSpecs,
       authorManifest =
-        authorKeptPlusNew(spark, table, prior, keep, packed, transforms, partTypes),
+        authorKeptPlusNew(table, prior, keep, packed, transforms, partTypes),
       // the new manifest carries every live data file; prior data
       // manifests are dropped, and delete manifests too when purged
       carryPrior = _ => Nil,
@@ -1367,14 +1066,14 @@ object IcebergWrite {
     * staged files (fresh bounds from the carried schema) — the
     * manifest-rewrite core [[compactOnce]] and [[replaceWhere]] share.
     * Returns commitSnapshot's authorManifest tuple. */
-  private def authorKeptPlusNew(spark: SparkSession, table: String,
+  private def authorKeptPlusNew(table: String,
       prior: com.fasterxml.jackson.databind.JsonNode, keep: Seq[LiveEntry],
       packed: DataFrame, transforms: Seq[IcebergTransforms.Transform],
       partTypes: Seq[(String, DataType)])(snapshotId: Long)
       : (java.nio.file.Path, Long, Int, Int, Int, Long) = {
     // stamp the table's field ids into the fresh files (same as append's
-    // staging) — id-expecting readers refuse id-less parquet
-    val newFiles = stageDataFiles(spark, packed, table, transforms, partTypes,
+    // write) — id-expecting readers refuse id-less parquet
+    val newFiles = writeDataFiles(packed, table, transforms, partTypes,
       fieldIdMap(Some(prior)))
     val schema = entrySchema(partTypes)
     import org.apache.avro.generic.GenericData
@@ -1390,7 +1089,7 @@ object IcebergWrite {
     val partitionSchema = dataFileSchema.getField("partition").schema()
     def entry(status: Int, snapId: Long, seq: Long, fileSeq: Long, path: String,
         part: Seq[(String, Any)], nRows: Long, bytes: Long,
-        stats: Map[String, (Any, Any, Long)],
+        stats: Seq[DataFileWriter.ColumnStats],
         rawBounds: Map[String, Seq[(Int, AnyRef)]] = Map.empty) = {
       val pr = new GenericData.Record(partitionSchema)
       part.foreach { case (k, v) => pr.put(k, v) }
@@ -1414,20 +1113,20 @@ object IcebergWrite {
       e.put("data_file", dfr)
       e
     }
-    val addedEntries = newFiles.map { case (p, nRows, values, stats) =>
-      entry(1, snapshotId, snapshotId, snapshotId, p.toString,
-        partTypes.map(_._1).zip(values), nRows, Files.size(p), stats)
+    val addedEntries = newFiles.map { w =>
+      entry(1, snapshotId, snapshotId, snapshotId, w.path,
+        partTypes.map(_._1).zip(w.keys), w.rows, w.bytes, w.stats)
     }
     val keptEntries = keep.map { f =>
       entry(0, f.snapshotId, f.seq.getOrElse(f.snapshotId),
         f.fileSeq.getOrElse(f.snapshotId), f.path, f.partition, f.records, f.bytes,
-        Map.empty, f.rawBounds)
+        Nil, f.rawBounds)
     }
     val manifestPath =
       metaDir(table).resolve(s"m-$snapshotId-${java.util.UUID.randomUUID()}.avro")
     val manifestLen = writeAvro(manifestPath, schema, keptEntries ++ addedEntries)
     (manifestPath, manifestLen, 0, prior.path("default-spec-id").asInt(0),
-      newFiles.size, newFiles.map(_._2).sum)
+      newFiles.size, newFiles.map(_.rows).sum)
   }
 
   /** PARTITION-SCOPED OVERWRITE (`replaceWhere`), the [[DeltaWrite
@@ -1475,7 +1174,7 @@ object IcebergWrite {
         schemasJson = carriedSchemas,
         specsJson = carriedSpecs,
         authorManifest =
-          authorKeptPlusNew(spark, table, prior, Nil, df, transforms, partTypes),
+          authorKeptPlusNew(table, prior, Nil, df, transforms, partTypes),
         carryPrior = _ => Nil,
         expectBase = Some(base))
     }
@@ -1521,7 +1220,7 @@ object IcebergWrite {
       schemasJson = carriedSchemas,
       specsJson = carriedSpecs,
       authorManifest =
-        authorKeptPlusNew(spark, table, prior, keep, df, transforms, partTypes),
+        authorKeptPlusNew(table, prior, keep, df, transforms, partTypes),
       carryPrior = _ => Nil,
       expectBase = Some(base))
   }
@@ -1564,24 +1263,9 @@ object IcebergWrite {
         }: _*).localCheckpoint()
       if (updated.isEmpty) return prior.get.path("current-snapshot-id").asLong(-1L)
 
-      // old images → sorted (file_path, pos) delete parquet, exactly like
-      // [[deleteWhere]]'s staging
-      val matched = scoped(pruned)
-        .where(condition)
-        .select(fcol("_file").as("file_path"), fcol("_pos").as("pos"))
-      val stage = Files.createTempDirectory("graft_iceberg_update")
-      matched.repartition(1).sortWithinPartitions("file_path", "pos")
-        .write.mode("overwrite").parquet(stage.toString)
-      def rmr(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr); f.delete()
-      }
-      val stagedFiles = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).toSeq
-      val nDeleted = spark.read.parquet(stage.toString).count()
-      Files.createDirectories(dataDir(table))
-      val deleteFile = dataDir(table).resolve(s"delete-${java.util.UUID.randomUUID()}.parquet")
-      Files.move(stagedFiles.head.toPath, deleteFile)
-      rmr(stage.toFile)
+      // old images → one sorted (file_path, pos) delete file, exactly like
+      // [[deleteWhere]]'s; non-empty because the updated images are
+      val deleteFile = writePositionDeletes(table, scoped(pruned).where(condition)).get
 
       val (emptySpecId, mintEmptySpec) = emptySpecFor(prior.get)
       val partitionBy = priorPartitionBy(prior.get)
@@ -1600,33 +1284,15 @@ object IcebergWrite {
           else (s"""$specs,{"spec-id":$emptySpecId,"fields":[]}""", defaultId, lastPartId)
         },
         authorManifest = { snapshotId =>
-          import org.apache.avro.generic.GenericData
-          val schema = entrySchema(Seq.empty)
-          val dataFileSchema = schema.getField("data_file").schema()
-          val partitionSchema = dataFileSchema.getField("partition").schema()
-          val dfr = new GenericData.Record(dataFileSchema)
-          dfr.put("content", 1) // POSITION_DELETES
-          dfr.put("file_path", deleteFile.toString)
-          dfr.put("file_format", "PARQUET")
-          dfr.put("partition", new GenericData.Record(partitionSchema))
-          dfr.put("record_count", nDeleted)
-          dfr.put("file_size_in_bytes", Files.size(deleteFile))
-          val e = new GenericData.Record(schema)
-          e.put("status", 1)
-          e.put("snapshot_id", snapshotId)
-          e.put("sequence_number", snapshotId)
-          e.put("file_sequence_number", snapshotId)
-          e.put("data_file", dfr)
-          val dmPath = metaDir(table).resolve(s"m-$snapshotId-${java.util.UUID.randomUUID()}.avro")
-          val dmLen = writeAvro(dmPath, schema, Seq(e))
+          val (dmPath, dmLen) = deleteFilesManifest(table, Seq(deleteFile), 1, Nil, snapshotId)
           deleteManifest = (dmPath.toString, dmLen, 1, emptySpecId)
-          authorKeptPlusNew(spark, table, prior.get, Seq.empty, updated,
+          authorKeptPlusNew(table, prior.get, Seq.empty, updated,
             transforms, partTypes)(snapshotId)
         },
         carryPrior = ms => ms :+ deleteManifest,
         expectBase = Some(base))
       if (committed >= 0) return committed
-      Files.deleteIfExists(deleteFile) // lost the race: re-derive everything
+      Files.deleteIfExists(Paths.get(deleteFile.path)) // lost the race: re-derive everything
     }
     -1L // unreachable
   }
@@ -1644,7 +1310,10 @@ object IcebergWrite {
     * manifest-list → manifest → `file_path` closure, all entry statuses
     * included — a file marked DELETED in one retained snapshot can still
     * be live in an older retained one, so only full absence makes a file
-    * reclaimable. Foreign files under the table root are left alone.
+    * reclaimable. Foreign files under the table root are left alone;
+    * orphans of failed or abandoned writes (their files land under data/
+    * before any commit claim, [[DataFileWriter]]) are reclaimed with the
+    * first expiration after them.
     * Metadata-only: O(manifests) driver reads, no data scanned. */
   /** UNIFORM-STYLE EXPORT (zero-copy cross-format): create a NEW Iceberg
     * table at `target` whose single append snapshot references the DELTA
@@ -2134,7 +1803,7 @@ object IcebergWrite {
         Files.writeString(metaDir(table).resolve("version-hint.text"), (base + 1).toString)
         def norm(f: java.io.File): String = IcebergRead.localPath(f.getAbsolutePath)
         // AGE GRACE (same rule as DeltaWrite.vacuum): a concurrent append
-        // stages data files under data/ BEFORE its metadata claim —
+        // writes data files under data/ BEFORE its metadata claim —
         // fresh unreferenced files may be in-flight adds, not garbage
         val cutoff = System.currentTimeMillis() - math.max(0L, minFileAgeMs)
         val dataDeleted = Option(dataDir(table).toFile.listFiles()).getOrElse(Array.empty)
@@ -2205,7 +1874,7 @@ object IcebergWrite {
     require(prior0.isDefined, s"not an Iceberg table: $table")
     val (emptySpecId, mintEmptySpec) = emptySpecFor(prior0.get)
     val (deleteFiles, eqIds) =
-      stageEqualityDeletes(spark, table, prior0.get, keys, maxKeysPerFile)
+      writeEqualityDeletes(table, prior0.get, keys, maxKeysPerFile)
     commitSnapshot(table, "delete",
       schemasJson = carriedSchemas,
       specsJson = prior => {
@@ -2214,19 +1883,19 @@ object IcebergWrite {
         else (s"""$specs,{"spec-id":$emptySpecId,"fields":[]}""", defaultId, lastPartId)
       },
       authorManifest = { snapshotId =>
-        val (p, len) = equalityDeleteManifest(table, deleteFiles, eqIds, snapshotId)
+        val (p, len) = deleteFilesManifest(table, deleteFiles, 2, eqIds, snapshotId)
         (p, len, 1, emptySpecId, deleteFiles.size, 0L)
       },
       summaryProps = summaryProps)
   }
 
-  /** Resolve `keys`' columns to Iceberg field ids and stage the DISTINCT
-    * key rows as equality-delete parquet files under data/ — the staging
+  /** Resolve `keys`' columns to Iceberg field ids and write the DISTINCT
+    * key rows as equality-delete parquet files under data/ — the write
     * half [[deleteWhereEquals]] and [[rowDeltaCommit]] share. Returns
     * (delete files with exact record counts, key field ids). */
-  private def stageEqualityDeletes(spark: SparkSession, table: String,
+  private def writeEqualityDeletes(table: String,
       prior: com.fasterxml.jackson.databind.JsonNode, keys: DataFrame,
-      maxKeysPerFile: Long): (Seq[(java.nio.file.Path, Long)], Seq[Int]) = {
+      maxKeysPerFile: Long): (Seq[DataFileWriter.WrittenFile], Seq[Int]) = {
     // key columns → Iceberg field ids from the current schema
     val cur = prior.path("schemas").elements().asScala
       .find(_.path("schema-id").asInt(-1) == prior.path("current-schema-id").asInt(0))
@@ -2237,60 +1906,50 @@ object IcebergWrite {
       throw new IllegalArgumentException(
         s"key column '$c' is not in the table schema (${idByName.keys.mkString(",")})")))
 
-    val stage = Files.createTempDirectory("graft_iceberg_eqdelete")
-    // one distinct shuffle; count + write reuse its shuffle files. The
-    // file count scales with the key count so each delete file is written
-    // by its own task and stays individually scannable.
+    // the file count scales with the key count so each delete file is
+    // written by its own task and stays individually scannable
     val distinctKeys = keys.distinct()
     val nKeys = distinctKeys.count()
     require(nKeys > 0, "equality delete with an empty key set")
     val nFiles = math.max(1L, (nKeys + maxKeysPerFile - 1) / maxKeysPerFile).toInt
-    stampFieldIds(distinctKeys.repartition(nFiles),
-        keys.columns.toSeq.zip(eqIds).toMap)
-      .write.mode("overwrite").parquet(stage.toString)
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr); f.delete()
-    }
-    // exact per-file record counts (the manifest's record_count is load-
-    // bearing for real readers) in one metadata-cheap job over the stage
-    import org.apache.spark.sql.functions.{count => fcount, input_file_name, lit => flit}
-    val perFileCounts: Map[String, Long] = spark.read.parquet(stage.toString)
-      .groupBy(input_file_name().as("f")).agg(fcount(flit(1)).as("n"))
-      .collect()
-      .map(r => (new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath
-        .split("/").last, r.getLong(1))).toMap
-    val staged = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet") && perFileCounts.contains(f.getName))
-      .toSeq
-    Files.createDirectories(dataDir(table))
-    val deleteFiles: Seq[(java.nio.file.Path, Long)] = staged.map { f =>
-      val dest = dataDir(table).resolve(s"eq-delete-${java.util.UUID.randomUUID()}.parquet")
-      Files.move(f.toPath, dest)
-      (dest, perFileCounts(f.getName))
-    }
-    rmr(stage.toFile)
+    val deleteFiles = DataFileWriter.write(
+      stampFieldIds(distinctKeys.repartition(nFiles), keys.columns.toSeq.zip(eqIds).toMap),
+      dataBase(table), keyPrefix = _ => "eq-delete-")
     (deleteFiles, eqIds)
   }
 
-  /** Author the ONE equality-delete manifest for `deleteFiles` (content=2
-    * entries carrying the key field ids). Returns (path, length). */
-  private def equalityDeleteManifest(table: String,
-      deleteFiles: Seq[(java.nio.file.Path, Long)], eqIds: Seq[Int],
+  /** Write the matched rows' (`_file`, `_pos`) lineage as ONE position-
+    * delete file under data/ — the v2 spec's (file_path, pos) table,
+    * sorted as the spec recommends. None when nothing matched. */
+  private def writePositionDeletes(table: String,
+      matched: DataFrame): Option[DataFileWriter.WrittenFile] = {
+    import org.apache.spark.sql.functions.col
+    DataFileWriter.write(
+      matched.select(col("_file").as("file_path"), col("_pos").as("pos"))
+        .repartition(1).sortWithinPartitions("file_path", "pos"),
+      dataBase(table), keyPrefix = _ => "delete-").headOption
+  }
+
+  /** Author the ONE delete manifest for `deleteFiles`: content 1
+    * (position deletes) or 2 (equality deletes, carrying the key field
+    * ids). Returns (path, length). */
+  private def deleteFilesManifest(table: String,
+      deleteFiles: Seq[DataFileWriter.WrittenFile], content: Int, eqIds: Seq[Int],
       snapshotId: Long): (java.nio.file.Path, Long) = {
     import org.apache.avro.generic.GenericData
     val schema = entrySchema(Seq.empty)
     val dataFileSchema = schema.getField("data_file").schema()
     val partitionSchema = dataFileSchema.getField("partition").schema()
-    val entries = deleteFiles.map { case (path, n) =>
+    val entries = deleteFiles.map { f =>
       val dfr = new GenericData.Record(dataFileSchema)
-      dfr.put("content", 2) // EQUALITY_DELETES
-      dfr.put("file_path", path.toString)
+      dfr.put("content", content)
+      dfr.put("file_path", f.path)
       dfr.put("file_format", "PARQUET")
       dfr.put("partition", new GenericData.Record(partitionSchema))
-      dfr.put("record_count", n)
-      dfr.put("file_size_in_bytes", Files.size(path))
-      dfr.put("equality_ids",
-        java.util.Arrays.asList(eqIds.map(Integer.valueOf): _*))
+      dfr.put("record_count", f.rows)
+      dfr.put("file_size_in_bytes", f.bytes)
+      if (content == 2)
+        dfr.put("equality_ids", java.util.Arrays.asList(eqIds.map(Integer.valueOf): _*))
       val e = new GenericData.Record(schema)
       e.put("status", 1)
       e.put("snapshot_id", snapshotId)
@@ -2325,8 +1984,7 @@ object IcebergWrite {
       require(declared(f.name) == icebergType(f.dataType),
         s"upsert column '${f.name}' type ${icebergType(f.dataType)} does not " +
           s"match table's ${declared(f.name)}"))
-    val (deleteFiles, eqIds) =
-      stageEqualityDeletes(spark, table, prior, keys, 4000000L)
+    val (deleteFiles, eqIds) = writeEqualityDeletes(table, prior, keys, 4000000L)
     val partitionBy = priorPartitionBy(prior)
     val transforms = partitionBy.map(IcebergTransforms.parse)
     val partTypes: Seq[(String, DataType)] =
@@ -2340,9 +1998,9 @@ object IcebergWrite {
         else (s"""$specs,{"spec-id":$emptySpecId,"fields":[]}""", defaultId, lastPartId)
       },
       authorManifest = { snapshotId =>
-        val (dmPath, dmLen) = equalityDeleteManifest(table, deleteFiles, eqIds, snapshotId)
+        val (dmPath, dmLen) = deleteFilesManifest(table, deleteFiles, 2, eqIds, snapshotId)
         deleteManifest = (dmPath.toString, dmLen, 1, emptySpecId)
-        authorKeptPlusNew(spark, table, prior, Seq.empty, rows,
+        authorKeptPlusNew(table, prior, Seq.empty, rows,
           transforms, partTypes)(snapshotId)
       },
       carryPrior = ms => ms :+ deleteManifest,
@@ -2415,7 +2073,6 @@ object IcebergWrite {
   def deleteWhere(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column,
       alias: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions._
     // an alias names the target for the condition's qualified /
     // subquery-correlated references (DELETE FROM '<p>' t WHERE … t.id …)
     def scoped(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
@@ -2426,28 +2083,13 @@ object IcebergWrite {
     // could be anything — assuming it is empty would mislabel the manifest)
     val (emptySpecId, mintEmptySpec) = emptySpecFor(prior0.get)
 
-    // one scan: matched rows → (file_path, pos), written sorted by
-    // (path, pos) as the spec recommends for delete files
+    // one scan: matched rows → one (file_path, pos) delete file
     // stats-pruned lineage: only files the predicate can touch are opened
-    val matched = scoped(IcebergRead.lineagePruned(spark, table, condition))
-      .where(condition)
-      .select(col("_file").as("file_path"), col("_pos").as("pos"))
-    val stage = Files.createTempDirectory("graft_iceberg_delete")
-    matched.repartition(1).sortWithinPartitions("file_path", "pos")
-      .write.mode("overwrite").parquet(stage.toString)
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr); f.delete()
+    val deleteFile = writePositionDeletes(table,
+        scoped(IcebergRead.lineagePruned(spark, table, condition)).where(condition)) match {
+      case Some(f) => f
+      case None => return -1L
     }
-    val staged = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).toSeq
-    val nDeleted = spark.read.parquet(stage.toString).count()
-    if (nDeleted == 0) { rmr(stage.toFile); return -1L }
-    Files.createDirectories(dataDir(table))
-    val deleteFile = dataDir(table).resolve(s"delete-${java.util.UUID.randomUUID()}.parquet")
-    Files.move(staged.head.toPath, deleteFile)
-    rmr(stage.toFile)
-
-    val schema = entrySchema(Seq.empty)
     commitSnapshot(table, "delete",
       schemasJson = carriedSchemas,
       specsJson = prior => {
@@ -2456,25 +2098,8 @@ object IcebergWrite {
         else (s"""$specs,{"spec-id":$emptySpecId,"fields":[]}""", defaultId, lastPartId)
       },
       authorManifest = { snapshotId =>
-        import org.apache.avro.generic.GenericData
-        val dataFileSchema = schema.getField("data_file").schema()
-        val partitionSchema = dataFileSchema.getField("partition").schema()
-        val dfr = new GenericData.Record(dataFileSchema)
-        dfr.put("content", 1) // POSITION_DELETES
-        dfr.put("file_path", deleteFile.toString)
-        dfr.put("file_format", "PARQUET")
-        dfr.put("partition", new GenericData.Record(partitionSchema))
-        dfr.put("record_count", nDeleted)
-        dfr.put("file_size_in_bytes", Files.size(deleteFile))
-        val e = new GenericData.Record(schema)
-        e.put("status", 1)
-        e.put("snapshot_id", snapshotId)
-        e.put("sequence_number", snapshotId)
-        e.put("file_sequence_number", snapshotId)
-        e.put("data_file", dfr)
-        val manifestPath = metaDir(table).resolve(s"m-$snapshotId-${java.util.UUID.randomUUID()}.avro")
-        val manifestLen = writeAvro(manifestPath, schema, Seq(e))
-        (manifestPath, manifestLen, 1, emptySpecId, 1, 0L)
+        val (p, len) = deleteFilesManifest(table, Seq(deleteFile), 1, Nil, snapshotId)
+        (p, len, 1, emptySpecId, 1, 0L)
       })
   }
 }

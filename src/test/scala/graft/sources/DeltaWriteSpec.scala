@@ -275,16 +275,71 @@ class DeltaWriteSpec extends SparkSpec {
   }
 
   test("partition values with '+', space, and '%' survive the layout round-trip") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val table = Files.createTempDirectory("graft_dw_enc").toString
-    val vals = Seq("a+b", "c d", "e%f")
-    val df = vals.zipWithIndex.map { case (g, i) => (i.toLong, s"n$i", g) }
-      .toDF("id", "name", "grp")
-    DeltaWrite.append(spark, df, table, partitionBy = Seq("grp"))
-    // the log's partitionValues carry the RAW values…
-    val snap = DeltaRead.snapshotInfo(spark, table)
-    assert(snap.files.map(_.partitionValues("grp")).toSet === vals.toSet)
-    // …and the snapshot reconstructs them
-    assert(rows(DeltaRead.snapshot(spark, table)).map(_._3) === vals.toSet)
+    val vals = Seq("a+b", "c d", "e%f", null, "", "日本é", "k=v", "x/y")
+    val parts = Seq("grp", "d", "ts", "x", "n")
+    val schema = StructType(Seq(StructField("id", LongType), StructField("name", StringType),
+      StructField("grp", StringType), StructField("d", DateType),
+      StructField("ts", TimestampType), StructField("x", DoubleType),
+      StructField("n", IntegerType)))
+    val input = vals.zipWithIndex.map { case (g, i) =>
+      Row(i.toLong, s"n$i", g,
+        java.sql.Date.valueOf(java.time.LocalDate.of(2024, 2, 28).plusDays(i.toLong)),
+        java.sql.Timestamp.from(java.time.Instant.parse("2024-03-10T09:59:59Z")
+          .plusNanos(i * 3600000123000L)), // crosses the US DST switch, µs digits
+        Seq(1.5, -0.25, 1e10, 3.0)(i % 4),
+        if (i % 3 == 0) null else Integer.valueOf(i % 2))
+    }
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(input, 3), schema)
+      DeltaWrite.append(spark, df, table, partitionBy = parts)
+      // the snapshot reconstructs the input multiset — '' reads back as
+      // NULL, exactly as through Spark's own partitioned layout
+      def norm(r: Row): Row = Row.fromSeq(r.toSeq.map { case "" => null; case v => v })
+      val cols = schema.fieldNames.toSeq.map(org.apache.spark.sql.functions.col)
+      assert(DeltaRead.snapshot(spark, table).select(cols: _*).collect().toSeq
+        .sortBy(_.getLong(0)) === input.map(norm))
+      // the log's partitionValues are the strings Spark's own partitionBy
+      // renders, read back by Spark with type inference off. Spark names
+      // its directories with the raw value, which a JVM whose file-name
+      // encoding is not Unicode cannot represent (graft's layout
+      // percent-encodes, so it can) — the reference then skips such rows.
+      val nameable = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+        .newEncoder()
+      def canName(g: String) = g == null || nameable.canEncode(g)
+      val sparkDir = Files.createTempDirectory("graft_dw_enc_spark").toString + "/t"
+      spark.createDataFrame(spark.sparkContext.parallelize(
+          input.filter(r => canName(r.getString(2))), 3), schema)
+        .write.partitionBy(parts: _*).parquet(sparkDir)
+      spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+      val sparkValues =
+        try spark.read.parquet(sparkDir).select(parts.map(org.apache.spark.sql.functions.col): _*)
+          .collect().map(r => parts.indices.map(r.getString).toSeq).toSet
+        finally spark.conf.unset("spark.sql.sources.partitionColumnTypeInference.enabled")
+      val logValues = DeltaRead.snapshotInfo(spark, table).files
+        .map(f => parts.map(f.partitionValues))
+        .filter(v => canName(v.head)).toSet
+      assert(logValues === sparkValues)
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
+  test("NULL and '' partition values log JSON null and read back as NULL") {
+    val table = Files.createTempDirectory("graft_dw_null").toString
+    val df = Seq((1L, "a", "a"), (2L, "b", null), (3L, "c", "")).toDF("id", "name", "grp")
+    val v = DeltaWrite.append(spark, df, table, partitionBy = Seq("grp"))
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    import scala.jdk.CollectionConverters._
+    val logged = Files.readAllLines(Paths.get(table, "_delta_log", f"$v%020d.json"))
+      .asScala.map(om.readTree).filter(_.has("add"))
+      .map(_.path("add").path("partitionValues").get("grp"))
+    assert(logged.count(_.isNull) === 2 && logged.count(_.asText() == "a") === 1,
+      logged.mkString(","))
+    assert(DeltaRead.snapshot(spark, table).where("grp IS NULL").count() === 2L)
+    assert(spark.read.parquet(table).where("grp IS NULL").count() === 2L)
   }
 
   test("checkpoint add rows carry spec-required size/modificationTime/dataChange") {
