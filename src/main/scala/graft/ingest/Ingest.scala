@@ -164,8 +164,9 @@ object Stage {
 }
 
 /** C6/C7/C9: the catalog is a Parquet table with an append-only JSON
-  * transaction log (Delta-paper pattern, PAPERS.md): each commit atomically
-  * adds a version file listing the parquet parts it added; readers
+  * transaction log (Delta-paper pattern, PAPERS.md): each commit adds a
+  * version file listing the parquet parts it added, claimed through
+  * [[graft.sources.LakeLog.claim]] like the lake tables' logs; readers
   * reconstruct the table as the union of all live parts. No second system —
   * "indexing into Elasticsearch" (C7) becomes plain Spark SQL over this
   * table. */
@@ -210,22 +211,10 @@ class Catalog(spark: SparkSession, root: String) {
     else spark.read.parquet(parts: _*)
   }
 
-  /** Put-if-absent version claim — the Delta paper's commit primitive on a
-    * filesystem. A plain rename (`Files.move`) silently REPLACES an existing
-    * target on POSIX, which under two concurrent committers is a lost
-    * update; a hard link fails atomically with FileAlreadyExistsException
-    * instead, so exactly one claimant wins each version number. */
-  private def tryCommitAt(version: Int, content: String): Boolean = {
-    Files.createDirectories(logDir)
-    val tmp = Files.createTempFile(logDir, "commit", ".tmp")
-    try {
-      Files.writeString(tmp, content)
-      Files.createLink(logDir.resolve(f"$version%08d.json"), tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false // lost the race
-    } finally Files.delete(tmp)
-  }
+  /** Put-if-absent claim of log version `version`: exactly one concurrent
+    * claimant wins each number. */
+  private def tryCommitAt(version: Int, content: String): Boolean =
+    graft.sources.LakeLog.claim(logDir, f"$version%08d.json", content)
 
   /** C6: append entries as a new parquet part + commit a new log version.
     * A pure add commutes with ANY concurrent commit, so losing the version

@@ -413,8 +413,6 @@ object IoQueries {
           "snapshots":[{"snapshot-id":0,"manifest-list":"$table/metadata/ml0.avro"},
                        {"snapshot-id":1,"manifest-list":"$table/metadata/ml1.avro"}]}""")
           .replaceAll("\n\\s*", ""))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(table, "metadata", "version-hint.text"), "2")
 
       def agg(snapId: Long) = graft.sources.IcebergRead.snapshot(s, table, snapId)
         .groupBy(col("event_type"))
@@ -428,7 +426,7 @@ object IoQueries {
 
   /** Delta WRITER round-trip (sources.DeltaWrite → sources.DeltaRead): two
     * appends through the writer's own commit protocol (partitioned layout,
-    * hard-link version claims), both versions read back through the log
+    * LakeLog version claims), both versions read back through the log
     * reader. v0 = events without clicks, v1 = + clicks. */
   val tdeltaRt = GQuery(
     "t_delta_roundtrip",

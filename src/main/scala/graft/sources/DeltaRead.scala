@@ -119,6 +119,39 @@ object DeltaRead {
   private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** One listing of a `_delta_log` on file system `fs`: each commit file
+    * as (version, status) and each checkpoint version, both ascending. */
+  private[sources] case class LogListing(fs: org.apache.hadoop.fs.FileSystem,
+      commits: Seq[(Long, org.apache.hadoop.fs.FileStatus)], checkpoints: Seq[Long]) {
+    def versions: Seq[Long] = commits.map(_._1)
+  }
+
+  /** The table's log listing, None when it has no `_delta_log` — the one
+    * place commit and checkpoint file names are recognised. */
+  private[sources] def listLog(spark: SparkSession, table: String): Option[LogListing] = {
+    val dir = new org.apache.hadoop.fs.Path(logPath(table))
+    val hfs = fs(spark, dir)
+    if (!hfs.exists(dir)) None
+    else {
+      val all = hfs.listStatus(dir).toSeq
+      def versioned(n: String) = n.take(20).forall(_.isDigit)
+      Some(LogListing(hfs,
+        all.collect { case st if st.getPath.getName.length == 25 &&
+            st.getPath.getName.endsWith(".json") && versioned(st.getPath.getName) =>
+          st.getPath.getName.take(20).toLong -> st
+        }.sortBy(_._1),
+        all.map(_.getPath.getName).collect {
+          case n if n.endsWith(".checkpoint.parquet") && versioned(n) => n.take(20).toLong
+        }.sorted))
+    }
+  }
+
+  private def existingLog(spark: SparkSession, table: String): LogListing = {
+    val log = listLog(spark, table)
+    require(log.isDefined, s"not a Delta table (no _delta_log): $table")
+    log.get
+  }
+
   /** Percent-only decode (RFC 3986): log paths encode special chars as %XX
     * but a literal '+' is just '+' — URLDecoder alone would corrupt it to a
     * space (form-urlencoded rules), so protect it first. */
@@ -137,26 +170,15 @@ object DeltaRead {
     * before the target exists) + JSON commits after it, in version order. */
   def snapshotInfo(spark: SparkSession, table: String, version: Long = -1L): Snapshot = {
     import scala.jdk.CollectionConverters._
-    val dir = new org.apache.hadoop.fs.Path(logPath(table))
-    val hfs = fs(spark, dir)
-    require(hfs.exists(dir), s"not a Delta table (no _delta_log): $table")
-    val names = hfs.listStatus(dir).map(_.getPath.getName).toSeq
-
-    val commitVersions = names.collect {
-      case n if n.length == 25 && n.endsWith(".json") && n.take(20).forall(_.isDigit) =>
-        n.take(20).toLong
-    }.sorted
+    val log = existingLog(spark, table)
+    val commitVersions = log.versions
     require(commitVersions.nonEmpty, s"empty _delta_log in $table")
     val latest = commitVersions.max
     val target = if (version < 0) latest else version
     require(commitVersions.contains(target),
       s"version $target not in log (have ${commitVersions.min}..$latest)")
 
-    val checkpointVersions = names.collect {
-      case n if n.endsWith(".checkpoint.parquet") && n.take(20).forall(_.isDigit) =>
-        n.take(20).toLong
-    }.filter(_ <= target)
-    val fromCheckpoint = checkpointVersions.sorted.lastOption
+    val fromCheckpoint = log.checkpoints.filter(_ <= target).lastOption
 
     // A retention-cleaned log may have dropped early JSON commits; without a
     // checkpoint at/after the gap the replay would silently MISS adds. Every
@@ -248,7 +270,7 @@ object DeltaRead {
 
     val pending = commitVersions.filter(v => v > fromCheckpoint.getOrElse(-1L) && v <= target)
     pending.foreach { v =>
-      val actions = commitActionNodes(hfs, table, v)
+      val actions = commitActionNodes(log.fs, table, v)
       actions.foreach { a =>
         val pr = a.path("protocol")
         if (!pr.isMissingNode && !pr.isNull) {
@@ -328,20 +350,11 @@ object DeltaRead {
     * commits after it). A streaming sink consults this to skip replayed
     * batches. */
   def txnVersions(spark: SparkSession, table: String): Map[String, Long] = {
-    val dir = new org.apache.hadoop.fs.Path(logPath(table))
-    val hfs = fs(spark, dir)
-    if (!hfs.exists(dir)) return Map.empty
-    val names = hfs.listStatus(dir).map(_.getPath.getName).toSeq
-    val commitVersions = names.collect {
-      case n if n.length == 25 && n.endsWith(".json") && n.take(20).forall(_.isDigit) =>
-        n.take(20).toLong
-    }.sorted
+    val log = listLog(spark, table).getOrElse(return Map.empty)
+    val commitVersions = log.versions
     if (commitVersions.isEmpty) return Map.empty
     val latest = commitVersions.max
-    val fromCheckpoint = names.collect {
-      case n if n.endsWith(".checkpoint.parquet") && n.take(20).forall(_.isDigit) =>
-        n.take(20).toLong
-    }.filter(_ <= latest).sorted.lastOption
+    val fromCheckpoint = log.checkpoints.filter(_ <= latest).lastOption
     val marks = scala.collection.mutable.HashMap[String, Long]()
     fromCheckpoint.foreach { cv =>
       val cp = spark.read.parquet(s"${logPath(table)}/${f"$cv%020d"}.checkpoint.parquet")
@@ -350,7 +363,7 @@ object DeltaRead {
           .collect().foreach(r => marks(r.getString(0)) = r.getLong(1))
     }
     commitVersions.filter(_ > fromCheckpoint.getOrElse(-1L)).foreach { v =>
-      commitActionNodes(hfs, table, v).foreach { a =>
+      commitActionNodes(log.fs, table, v).foreach { a =>
         val t = a.path("txn")
         if (!t.isMissingNode && !t.isNull && t.has("appId")) {
           val app = t.path("appId").asText()
@@ -419,14 +432,8 @@ object DeltaRead {
     * filesystem-table convention stock Delta uses absent in-commit
     * timestamps). Fails loudly for a timestamp before the table existed. */
   def versionAt(spark: SparkSession, table: String, timestampMs: Long): Long = {
-    val dir = new org.apache.hadoop.fs.Path(logPath(table))
-    val hfs = fs(spark, dir)
-    require(hfs.exists(dir), s"not a Delta table (no _delta_log): $table")
-    val stamped = hfs.listStatus(dir).toSeq.collect {
-      case st if st.getPath.getName.length == 25 && st.getPath.getName.endsWith(".json") &&
-        st.getPath.getName.take(20).forall(_.isDigit) =>
-        (st.getPath.getName.take(20).toLong, st.getModificationTime)
-    }.sortBy(_._1)
+    val stamped = existingLog(spark, table).commits
+      .map { case (v, st) => (v, st.getModificationTime) }
     require(stamped.nonEmpty, s"empty _delta_log in $table")
     val eligible = stamped.filter(_._2 <= timestampMs)
     require(eligible.nonEmpty,
@@ -448,40 +455,16 @@ object DeltaRead {
     * config swap only). Driver-side line parse, O(log size); commits
     * cleaned by retention are simply absent. */
   def history(spark: SparkSession, table: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(logPath(table))
-    val hfs = fs(spark, dir)
-    require(hfs.exists(dir), s"not a Delta table (no _delta_log): $table")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val rows = hfs.listStatus(dir).toSeq.collect {
-      case st if st.getPath.getName.length == 25 && st.getPath.getName.endsWith(".json") &&
-        st.getPath.getName.take(20).forall(_.isDigit) =>
-        (st.getPath.getName.take(20).toLong, st.getModificationTime, st.getPath)
-    }.sortBy(_._1).map { case (v, mtime, p) =>
-      var (adds, removes, dataAdds, dataRemoves, dvAdds) = (0L, 0L, 0L, 0L, 0L)
-      var hasMeta = false
-      var hasProtocol = false
-      val in = hfs.open(p)
-      try {
-        val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-        var line = reader.readLine()
-        while (line != null) {
-          if (line.trim.nonEmpty) {
-            val n = om.readTree(line)
-            if (n.has("add")) {
-              adds += 1
-              if (n.path("add").path("dataChange").asBoolean(true)) dataAdds += 1
-              if (n.path("add").has("deletionVector")) dvAdds += 1
-            }
-            if (n.has("remove")) {
-              removes += 1
-              if (n.path("remove").path("dataChange").asBoolean(true)) dataRemoves += 1
-            }
-            if (n.has("metaData")) hasMeta = true
-            if (n.has("protocol")) hasProtocol = true
-          }
-          line = reader.readLine()
-        }
-      } finally in.close()
+    val log = existingLog(spark, table)
+    val rows = log.commits.map { case (v, st) =>
+      val actions = commitActionNodes(log.fs, table, v)
+      def count(kind: String)(p: com.fasterxml.jackson.databind.JsonNode => Boolean): Long =
+        actions.count(n => n.has(kind) && p(n.path(kind))).toLong
+      val (adds, removes) = (count("add")(_ => true), count("remove")(_ => true))
+      val dataAdds = count("add")(_.path("dataChange").asBoolean(true))
+      val dataRemoves = count("remove")(_.path("dataChange").asBoolean(true))
+      val dvAdds = count("add")(_.has("deletionVector"))
+      val hasProtocol = actions.exists(_.has("protocol"))
       val op =
         if (v == 0L && hasProtocol) "create"
         else if (adds > 0 && dataRemoves == 0 && removes > 0) "optimize"
@@ -490,7 +473,7 @@ object DeltaRead {
         else if (dataRemoves > 0) "delete"
         else if (adds > 0) "append"
         else "metadata"
-      (v, mtime, op, adds, removes)
+      (v, st.getModificationTime, op, adds, removes)
     }
     import spark.implicits._
     rows.toDF("version", "timestamp_ms", "operation", "added_files", "removed_files")
@@ -504,31 +487,12 @@ object DeltaRead {
     * surfaces as drop+add — Iceberg's field-id twin distinguishes them).
     * O(log files) driver metadata; no data touched. */
   def schemaHistory(spark: SparkSession, table: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(logPath(table))
-    val hfs = fs(spark, dir)
-    require(hfs.exists(dir), s"not a Delta table (no _delta_log): $table")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val versions = hfs.listStatus(dir).toSeq.collect {
-      case st if st.getPath.getName.length == 25 && st.getPath.getName.endsWith(".json") &&
-        st.getPath.getName.take(20).forall(_.isDigit) =>
-        (st.getPath.getName.take(20).toLong, st.getPath)
-    }.sortBy(_._1)
+    val log = existingLog(spark, table)
     var prev: Option[Seq[(String, String)]] = None
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, String)]
-    versions.foreach { case (v, p) =>
-      var schemaStr: Option[String] = None
-      val in = hfs.open(p)
-      try {
-        val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-        var line = reader.readLine()
-        while (line != null) {
-          if (line.trim.nonEmpty) {
-            val n = om.readTree(line)
-            if (n.has("metaData")) schemaStr = Some(n.path("metaData").path("schemaString").asText())
-          }
-          line = reader.readLine()
-        }
-      } finally in.close()
+    log.versions.foreach { v =>
+      val schemaStr = commitActionNodes(log.fs, table, v).filter(_.has("metaData"))
+        .lastOption.map(_.path("metaData").path("schemaString").asText())
       schemaStr.foreach { s =>
         val cols = DataType.fromJson(s).asInstanceOf[StructType]
           .fields.toSeq.map(f => f.name -> f.dataType.simpleString)

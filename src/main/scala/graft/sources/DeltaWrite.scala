@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 /** Writer for the open Delta `_delta_log` format — the outbound half of the
   * interop story ([[DeltaRead]] is inbound): tables written here are plain
@@ -10,14 +10,11 @@ import java.nio.file.{Files, Paths}
   * partition columns only in the log, optional checkpoint parquet +
   * `_last_checkpoint`) that any Delta reader can open.
   *
-  * Commit protocol: the same put-if-absent hard-link version claim as the
-  * engine's own catalog (graft.ingest.Catalog) — POSIX `createLink` fails
-  * atomically if the version file exists, so exactly one concurrent
-  * committer wins each number; appends commute and just re-claim the next
-  * version, overwrites re-read state before re-claiming (optimistic loop).
-  * This targets a filesystem with atomic link semantics (local/NFS/HDFS-
-  * style); object stores need a commit coordinator, exactly as stock Delta
-  * does on S3. */
+  * Commit protocol: each version file is published by [[LakeLog.claim]],
+  * so exactly one concurrent committer wins each number. Pure adds
+  * commute and just claim the next free version ([[commitNext]]); every
+  * other commit re-reads the snapshot and rebuilds on a lost claim
+  * ([[commitLoop]]). */
 object DeltaWrite {
 
   private def logDir(table: String) = Paths.get(table.stripSuffix("/"), "_delta_log")
@@ -40,33 +37,41 @@ object DeltaWrite {
     // total inverse of pctDecode even on degenerate paths
     diskRel.split("/", -1).map(pctEncode).mkString("/")
 
+  /** Log form of a live file's path: table-root-relative, percent-encoded. */
+  private def relPath(table: String, path: String): String =
+    pctEncodePath(path.stripPrefix(s"${table.stripSuffix("/")}/"))
+
   private def jsonStr(s: String): String = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     m.writeValueAsString(s) // proper JSON string escaping (quotes, controls)
   }
 
-  private def tryCommitAt(table: String, version: Long, content: String): Boolean = {
-    Files.createDirectories(logDir(table))
-    val tmp = Files.createTempFile(logDir(table), "commit", ".tmp")
-    try {
-      Files.writeString(tmp, content)
-      Files.createLink(logDir(table).resolve(f"$version%020d.json"), tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally Files.delete(tmp)
+  private def tryCommitAt(table: String, version: Long, content: String): Boolean =
+    LakeLog.claim(logDir(table), f"$version%020d.json", content)
+
+  private def currentVersions(spark: SparkSession, table: String): Seq[Long] =
+    DeltaRead.listLog(spark, table).map(_.versions).getOrElse(Nil)
+
+  /** Claim the next free version for a commit that commutes with any
+    * concurrent one (pure adds): a lost claim just tries the next number. */
+  private def commitNext(spark: SparkSession, table: String, content: String): Long = {
+    var v = currentVersions(spark, table).lastOption.map(_ + 1).getOrElse(0L)
+    while (!tryCommitAt(table, v, content)) v += 1
+    v
   }
 
-  private def currentVersions(table: String): Seq[Long] = {
-    val dir = logDir(table)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.length == 25 && n.endsWith(".json") && n.take(20).forall(_.isDigit))
-        .map(_.take(20).toLong).toList.sorted
-      finally s.close()
+  /** The optimistic read-modify-claim loop of every other commit: `build`
+    * derives the commit from a fresh snapshot and it claims the version
+    * after that snapshot; a lost claim re-reads and rebuilds. `None`
+    * commits nothing and returns the snapshot's version. */
+  @scala.annotation.tailrec
+  private def commitLoop(spark: SparkSession, table: String)(
+      build: DeltaRead.Snapshot => Option[String]): Long = {
+    val snap = DeltaRead.snapshotInfo(spark, table)
+    build(snap) match {
+      case None => snap.version
+      case Some(content) if tryCommitAt(table, snap.version + 1, content) => snap.version + 1
+      case Some(_) => commitLoop(spark, table)(build)
     }
   }
 
@@ -91,6 +96,14 @@ object DeltaWrite {
   }
 
   private def newTableId(): String = s"graft-${java.util.UUID.randomUUID()}"
+
+  /** The table's stable id, carried into every metaData swap. */
+  private def tableId(snap: DeltaRead.Snapshot): String =
+    if (snap.metaId.nonEmpty) snap.metaId else newTableId()
+
+  /** A metaData action keeping the snapshot's schema and partitioning. */
+  private def metaSwap(snap: DeltaRead.Snapshot, configuration: Map[String, String]): String =
+    metaAction(snap.schema, snap.partitionColumns, tableId(snap), configuration)
 
   /** Table property stamping a graft bucket layout: `"n,key"`. */
   private[sources] val bucketSpecKey = "graft.bucketSpec"
@@ -238,7 +251,7 @@ object DeltaWrite {
       partitionBy: Seq[String] = Nil, txn: Option[(String, Long)] = None,
       mergeSchema: Boolean = false,
       txns: Seq[(String, Long)] = Nil): Long = {
-    val exists = currentVersions(table).nonEmpty
+    val exists = currentVersions(spark, table).nonEmpty
     // BUCKET LAYOUT (SURVEY §2 S8bk): `partitionBy = Seq("bucket(n, key)")`
     // writes a storage-partitioned layout the zero-exchange routes can
     // read — rows hash through the SAME engine-pinned Murmur3 the Iceberg
@@ -329,8 +342,7 @@ object DeltaWrite {
         val merged = org.apache.spark.sql.types.StructType(
           snap.schema.fields.toSeq ++ newCols.map(f => f.copy(metadata =
             org.apache.spark.sql.types.Metadata.empty)))
-        evolvedMeta = Some(metaAction(merged, declaredParts,
-          if (snap.metaId.nonEmpty) snap.metaId else newTableId(), snap.configuration))
+        evolvedMeta = Some(metaAction(merged, declaredParts, tableId(snap), snap.configuration))
       }
       if (snap.columnMappingMode == "name") {
         val phys = snap.schema.fieldNames.map(n => n -> snap.physicalName(n)).toMap
@@ -373,10 +385,7 @@ object DeltaWrite {
     val txnAction = (txn.toSeq ++ txns).map { case (appId, v) =>
       s"""{"txn":{"appId":${jsonStr(appId)},"version":$v,"lastUpdated":${System.currentTimeMillis()}}}"""
     }
-    val content = (header ++ txnAction ++ adds).mkString("", "\n", "\n")
-    var v = currentVersions(table).lastOption.map(_ + 1).getOrElse(0L)
-    while (!tryCommitAt(table, v, content)) v += 1 // pure adds commute
-    v
+    commitNext(spark, table, (header ++ txnAction ++ adds).mkString("", "\n", "\n"))
   }
 
   /** Replace the table contents with `df` (remove all live files + add the
@@ -384,7 +393,8 @@ object DeltaWrite {
     * read and claim forces a re-read so no concurrent add is lost. */
   def overwrite(spark: SparkSession, df: DataFrame, table: String,
       partitionBy: Seq[String] = Nil): Long = {
-    require(currentVersions(table).nonEmpty, s"overwrite of non-existent table $table — use append")
+    require(currentVersions(spark, table).nonEmpty,
+      s"overwrite of non-existent table $table — use append")
     val snapAtCheck = DeltaRead.snapshotInfo(spark, table)
     val mapped = snapAtCheck.columnMappingMode == "name"
     if (mapped) {
@@ -406,25 +416,18 @@ object DeltaWrite {
     val (sdf, sparts) =
       if (mapped) toPhysical(snapAtCheck, df) else (df, partitionBy)
     val adds = writeFiles(sdf, table, sparts)
-    while (true) {
-      val snap = DeltaRead.snapshotInfo(spark, table)
-      val removes = snap.files.map { f =>
-        val rel = pctEncodePath(f.path.stripPrefix(s"${table.stripSuffix("/")}/"))
-        s"""{"remove":{"path":${jsonStr(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true}}"""
-      }
+    commitLoop(spark, table) { snap =>
+      val removes = snap.files.map(f => removeAction(relPath(table, f.path), dataChange = true))
       // metaData swap keeps the STABLE table id + configuration (the spec's
       // continuity rule); only the schema/partitioning may change, and the
       // schema change is safe because every old file is removed here.
       // Under mapping the schema is the snapshot's own (physical-name
       // metadata preserved) — df's logical schema lacks the mapping.
-      val content = (Seq(metaAction(
-        if (mapped) snap.schema else df.schema,
-        if (mapped) snap.partitionColumns else partitionBy,
-        if (snap.metaId.nonEmpty) snap.metaId else newTableId(),
-        snap.configuration)) ++ removes ++ adds).mkString("", "\n", "\n")
-      if (tryCommitAt(table, snap.version + 1, content)) return snap.version + 1
+      val meta =
+        if (mapped) metaSwap(snap, snap.configuration)
+        else metaAction(df.schema, partitionBy, tableId(snap), snap.configuration)
+      Some((meta +: (removes ++ adds)).mkString("", "\n", "\n"))
     }
-    -1L // unreachable
   }
 
   /** Which live files fall in the partitions matching `pred` (a predicate
@@ -494,7 +497,7 @@ object DeltaWrite {
     * attempt, exactly like [[overwrite]]). */
   def replaceWhere(spark: SparkSession, df: DataFrame, table: String,
       where: String): Long = {
-    require(currentVersions(table).nonEmpty,
+    require(currentVersions(spark, table).nonEmpty,
       s"replaceWhere on non-existent table $table — use append")
     val snap0 = DeltaRead.snapshotInfo(spark, table)
     require(snap0.schema.fieldNames.sorted.sameElements(df.schema.fieldNames.sorted),
@@ -514,8 +517,7 @@ object DeltaWrite {
     // appends still retry around harmlessly)
     val scopeAt0 = snap0.files.filter(
       scopeByPartition(spark, snap0, where, "replaceWhere")).map(_.path).toSet
-    while (true) {
-      val snap = DeltaRead.snapshotInfo(spark, table)
+    commitLoop(spark, table) { snap =>
       val inScope = scopeByPartition(spark, snap, where, "replaceWhere")
       val inScopeFiles = snap.files.filter(inScope)
       val newcomers = inScopeFiles.filterNot(f => scopeAt0.contains(f.path))
@@ -525,15 +527,9 @@ object DeltaWrite {
             s"replaced scope: ${newcomers.size} file(s) newer than the staging-time " +
             s"snapshot (v${snap0.version}) match the predicate (e.g. " +
             s"${newcomers.head.path}) — re-derive the replacement and retry")
-      val removes = inScopeFiles.map { f =>
-        removeAction(pctEncodePath(f.path.stripPrefix(s"${table.stripSuffix("/")}/")),
-          dataChange = true)
-      }
-      if (tryCommitAt(table, snap.version + 1,
-          (removes ++ adds).mkString("", "\n", "\n")))
-        return snap.version + 1
+      val removes = inScopeFiles.map(f => removeAction(relPath(table, f.path), dataChange = true))
+      Some((removes ++ adds).mkString("", "\n", "\n"))
     }
-    -1L // unreachable
   }
 
   /** SQL-UPDATE: rows of the current snapshot matching `condition` get
@@ -608,9 +604,10 @@ object DeltaWrite {
     import org.apache.spark.sql.functions.{col => fcol}
     require(curve == "z" || curve == "hilbert",
       s"unknown clustering curve '$curve' (z | hilbert)")
-    require(currentVersions(table).nonEmpty, s"not a Delta table: $table")
-    while (true) {
-      val snap = DeltaRead.snapshotInfo(spark, table)
+    require(currentVersions(spark, table).nonEmpty, s"not a Delta table: $table")
+    // a lost claim leaves this attempt's files unreferenced (vacuum debt);
+    // the next attempt re-derives from the fresh snapshot
+    commitLoop(spark, table) { snap =>
       // `where` scopes maintenance to the partitions matching a predicate
       // over the TYPED partition columns ("day = '2024-01-03'", "grp IN
       // (...)") — at 100 TB you compact yesterday's partition, not the
@@ -649,70 +646,53 @@ object DeltaWrite {
           val small = fs.filter(f => f.size < smallFileBytes || f.dv.isDefined)
           if (small.size >= 2 || small.exists(_.dv.isDefined)) small else Nil
         }.toSeq
-      if (candidates.isEmpty) return snap.version
-      // DVs applied during the read = materialized out of the new files
-      val df = DeltaRead.assembleData(spark, table, snap.copy(files = candidates),
-        lineage = false)
-      val nOut = math.max(1,
-        math.ceil(candidates.map(_.size).sum.toDouble / targetFileBytes).toInt)
-      val packed =
-        if (zorderBy.nonEmpty && curve == "hilbert")
-          // bits scale down with column count (n*bits must fit a long's 62
-          // usable bits) — a fixed 12 would refuse HILBERT BY over >5 columns
-          graft.operators.Layout.hilbertCluster(df, zorderBy, nOut,
-            bits = math.min(12, 62 / zorderBy.length))
-        else if (zorderBy.nonEmpty) graft.operators.Layout.zcluster(df, zorderBy, nOut)
-        else if (bucketSpec.isDefined) {
-          // recompute the ordinal; the writer distributes by it, so each
-          // bucket's rewritten rows become one compacted file
-          val (n, key) = bucketSpec.get
-          require(!snap.schema.fieldNames.contains("__gb"),
-            "bucketed Delta compact: column name '__gb' is reserved for " +
-              "the bucket-ordinal staging path")
-          val dt = snap.schema(key).dataType
-          df.withColumn("__gb", org.apache.spark.sql.functions.coalesce(
-            IcebergTransforms.Bucket(n, key).column(fcol(key), dt),
-            org.apache.spark.sql.functions.lit(0)))
-        }
-        // partitioned: the writer distributes by the partition values —
-        // one compacted file per partition
-        else if (snap.partitionColumns.nonEmpty) df
-        else df.repartition(nOut)
-      val (sPacked, sParts) =
-        if (bucketSpec.isDefined) (packed, Seq("__gb")) // mapping is none
-        else toPhysical(snap, packed)
-      val adds = writeFiles(sPacked, table, sParts, dataChange = false,
-        recordValues = bucketSpec.isEmpty)
-      val removes = candidates.map { f =>
-        removeAction(pctEncodePath(f.path.stripPrefix(s"${table.stripSuffix("/")}/")),
-          dataChange = false)
+      if (candidates.isEmpty) None else {
+        // DVs applied during the read = materialized out of the new files
+        val df = DeltaRead.assembleData(spark, table, snap.copy(files = candidates),
+          lineage = false)
+        val nOut = math.max(1,
+          math.ceil(candidates.map(_.size).sum.toDouble / targetFileBytes).toInt)
+        val packed =
+          if (zorderBy.nonEmpty && curve == "hilbert")
+            // bits scale down with column count (n*bits must fit a long's 62
+            // usable bits) — a fixed 12 would refuse HILBERT BY over >5 columns
+            graft.operators.Layout.hilbertCluster(df, zorderBy, nOut,
+              bits = math.min(12, 62 / zorderBy.length))
+          else if (zorderBy.nonEmpty) graft.operators.Layout.zcluster(df, zorderBy, nOut)
+          else if (bucketSpec.isDefined) {
+            // recompute the ordinal; the writer distributes by it, so each
+            // bucket's rewritten rows become one compacted file
+            val (n, key) = bucketSpec.get
+            require(!snap.schema.fieldNames.contains("__gb"),
+              "bucketed Delta compact: column name '__gb' is reserved for " +
+                "the bucket-ordinal staging path")
+            val dt = snap.schema(key).dataType
+            df.withColumn("__gb", org.apache.spark.sql.functions.coalesce(
+              IcebergTransforms.Bucket(n, key).column(fcol(key), dt),
+              org.apache.spark.sql.functions.lit(0)))
+          }
+          // partitioned: the writer distributes by the partition values —
+          // one compacted file per partition
+          else if (snap.partitionColumns.nonEmpty) df
+          else df.repartition(nOut)
+        val (sPacked, sParts) =
+          if (bucketSpec.isDefined) (packed, Seq("__gb")) // mapping is none
+          else toPhysical(snap, packed)
+        val adds = writeFiles(sPacked, table, sParts, dataChange = false,
+          recordValues = bucketSpec.isEmpty)
+        val removes = candidates.map(f => removeAction(relPath(table, f.path), dataChange = false))
+        Some((removes ++ adds).mkString("", "\n", "\n"))
       }
-      if (tryCommitAt(table, snap.version + 1,
-          (removes ++ adds).mkString("", "\n", "\n")))
-        return snap.version + 1
-      // lost the race: newly written files stay unreferenced (vacuum debt),
-      // correctness re-derives from the fresh snapshot next iteration
     }
-    -1L // unreachable
   }
 
-  /** VACUUM: physically delete data and DV files under the table root
-    * that no RETAINED version references — the cleanup half compaction
-    * and overwrite defer (their rewritten-away files stay on disk so
-    * retained-version time travel and spanning incremental reads keep
-    * working). Retention is version-count based in this engine's subset
-    * (`retainLastVersions`, default 1 = current only), the same contract
-    * as the wall-clock retention production Delta uses: time travel (and
-    * adds-only reads whose range starts) BEFORE the horizon fail after a
-    * vacuum — by design, and loudly (missing files). It also reclaims
-    * the orphans of failed or abandoned writes, whose files land under the
-    * table root before any commit claim ([[DataFileWriter]]).
-    *
-    * Only files a Delta writer lays down are candidates (`*.parquet`
-    * data, `deletion_vector_*.bin`); `_delta_log` is never touched, and
-    * foreign files are left alone. Returns the deleted paths. Metadata
-    * only: the referenced set is O(files × retained versions) from log
-    * replay — no data is read. */
+  /** SET table properties — one metadata-only commit merging `props` into
+    * the configuration (which every later commit carries forward). The
+    * ANALYZE-stats persistence slot; same mechanism as CHECK constraints. */
+  def setProperties(spark: SparkSession, table: String,
+      props: Map[String, String]): Long =
+    commitLoop(spark, table)(snap => Some(metaSwap(snap, snap.configuration ++ props)))
+
   /** CHECK constraints (the protocol's `delta.constraints.<name>`
     * configuration): [[addCheckConstraint]] first proves every EXISTING
     * row satisfies the predicate (one distributed count — a constraint
@@ -723,21 +703,6 @@ object DeltaWrite {
     * semantics: only FALSE violates (NULL passes — the standard CHECK
     * rule, so `x > 0` admits null x unless you also constrain
     * `x IS NOT NULL`). */
-  /** SET table properties — one metadata-only commit merging `props` into
-    * the configuration (which every later commit carries forward). The
-    * ANALYZE-stats persistence slot; same mechanism as CHECK constraints. */
-  def setProperties(spark: SparkSession, table: String,
-      props: Map[String, String]): Long = {
-    while (true) {
-      val snap = DeltaRead.snapshotInfo(spark, table)
-      val content = metaAction(snap.schema, snap.partitionColumns,
-        if (snap.metaId.nonEmpty) snap.metaId else newTableId(),
-        snap.configuration ++ props)
-      if (tryCommitAt(table, snap.version + 1, content)) return snap.version + 1
-    }
-    -1L // unreachable
-  }
-
   def addCheckConstraint(spark: SparkSession, table: String,
       name: String, predicateSql: String): Long = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
@@ -746,30 +711,20 @@ object DeltaWrite {
       .where(!coalesce(expr(predicateSql), lit(true))).count()
     require(nViol == 0,
       s"cannot add CHECK constraint '$name': $nViol existing rows violate ($predicateSql)")
-    while (true) {
-      val snap = DeltaRead.snapshotInfo(spark, table)
-      val key = s"delta.constraints.$name"
+    val key = s"delta.constraints.$name"
+    commitLoop(spark, table) { snap =>
       require(!snap.configuration.contains(key), s"constraint '$name' already exists")
-      val content = metaAction(snap.schema, snap.partitionColumns,
-        if (snap.metaId.nonEmpty) snap.metaId else newTableId(),
-        snap.configuration + (key -> predicateSql))
-      if (tryCommitAt(table, snap.version + 1, content)) return snap.version + 1
+      Some(metaSwap(snap, snap.configuration + (key -> predicateSql)))
     }
-    -1L // unreachable
   }
 
   /** Remove a CHECK constraint; no-op version bump refused if absent. */
   def dropCheckConstraint(spark: SparkSession, table: String, name: String): Long = {
-    while (true) {
-      val snap = DeltaRead.snapshotInfo(spark, table)
-      val key = s"delta.constraints.$name"
+    val key = s"delta.constraints.$name"
+    commitLoop(spark, table) { snap =>
       require(snap.configuration.contains(key), s"no constraint '$name' on $table")
-      val content = metaAction(snap.schema, snap.partitionColumns,
-        if (snap.metaId.nonEmpty) snap.metaId else newTableId(),
-        snap.configuration - key)
-      if (tryCommitAt(table, snap.version + 1, content)) return snap.version + 1
+      Some(metaSwap(snap, snap.configuration - key))
     }
-    -1L // unreachable
   }
 
   /** Enforce the table's installed CHECK constraints on incoming rows —
@@ -839,8 +794,7 @@ object DeltaWrite {
     * it as drop+add, the spec's own limitation. */
   def renameColumn(spark: SparkSession, table: String,
       oldName: String, newName: String): Long = {
-    while (true) {
-      val snap = DeltaRead.snapshotInfo(spark, table)
+    commitLoop(spark, table) { snap =>
       require(snap.schema.fieldNames.contains(oldName),
         s"no column '$oldName' in ${snap.schema.fieldNames.mkString(",")}")
       require(!snap.schema.fieldNames.contains(newName),
@@ -849,13 +803,9 @@ object DeltaWrite {
       val renamed = org.apache.spark.sql.types.StructType(
         mapped.fields.map(f => if (f.name == oldName) f.copy(name = newName) else f))
       val parts = snap.partitionColumns.map(c => if (c == oldName) newName else c)
-      val content = (mappingProtocol(snap).toSeq :+
-        metaAction(renamed, parts,
-          if (snap.metaId.nonEmpty) snap.metaId else newTableId(), conf))
-        .mkString("", "\n", "\n")
-      if (tryCommitAt(table, snap.version + 1, content)) return snap.version + 1
+      Some((mappingProtocol(snap).toSeq :+ metaAction(renamed, parts, tableId(snap), conf))
+        .mkString("", "\n", "\n"))
     }
-    -1L // unreachable
   }
 
   /** DROP a column — metadata-only under column mapping: the field leaves
@@ -863,8 +813,7 @@ object DeltaWrite {
     * which the mapped projection simply never reads. Partition columns
     * cannot be dropped (their values live in the layout, not the files). */
   def dropColumn(spark: SparkSession, table: String, name: String): Long = {
-    while (true) {
-      val snap = DeltaRead.snapshotInfo(spark, table)
+    commitLoop(spark, table) { snap =>
       require(snap.schema.fieldNames.contains(name),
         s"no column '$name' in ${snap.schema.fieldNames.mkString(",")}")
       require(!snap.partitionColumns.contains(name),
@@ -873,13 +822,10 @@ object DeltaWrite {
       val (mapped, conf) = withMapping(snap)
       val dropped = org.apache.spark.sql.types.StructType(
         mapped.fields.filterNot(_.name == name))
-      val content = (mappingProtocol(snap).toSeq :+
-        metaAction(dropped, snap.partitionColumns,
-          if (snap.metaId.nonEmpty) snap.metaId else newTableId(), conf))
-        .mkString("", "\n", "\n")
-      if (tryCommitAt(table, snap.version + 1, content)) return snap.version + 1
+      Some((mappingProtocol(snap).toSeq :+
+        metaAction(dropped, snap.partitionColumns, tableId(snap), conf))
+        .mkString("", "\n", "\n"))
     }
-    -1L // unreachable
   }
 
   /** CONVERT TO DELTA, in place: write a `_delta_log` INTO an existing
@@ -896,7 +842,7 @@ object DeltaWrite {
     * constraints, clone, export all apply. */
   def convertParquet(spark: SparkSession, dir: String,
       partitionBy: Seq[String] = Nil): Long = {
-    require(currentVersions(dir).isEmpty, s"$dir already has a _delta_log")
+    require(currentVersions(spark, dir).isEmpty, s"$dir already has a _delta_log")
     val root = new java.io.File(dir.stripSuffix("/"))
     require(root.isDirectory, s"not a directory: $dir")
     val df = spark.read.parquet(dir)
@@ -933,7 +879,6 @@ object DeltaWrite {
     }
     val content = (Seq(protocolAction,
       metaAction(schema, partitionBy, newTableId())) ++ adds).mkString("", "\n", "\n")
-    Files.createDirectories(logDir(dir))
     require(tryCommitAt(dir, 0L, content), s"concurrent writer created a log at $dir")
     0L
   }
@@ -950,7 +895,7 @@ object DeltaWrite {
     * compact first, which materializes deletes). Iceberg-side expiration
     * is the shared-fate hazard. */
   def exportIcebergAsDelta(spark: SparkSession, source: String, target: String): Long = {
-    require(currentVersions(target).isEmpty, s"export target already exists: $target")
+    require(currentVersions(spark, target).isEmpty, s"export target already exists: $target")
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val meta = om.readTree(IcebergRead.metadataFile(source))
     val cur = meta.path("current-snapshot-id").asLong(-1L)
@@ -1001,7 +946,6 @@ object DeltaWrite {
     }
     val content = (Seq(protocolAction, metaAction(schema, Nil, newTableId())) ++ adds)
       .mkString("", "\n", "\n")
-    Files.createDirectories(logDir(target))
     require(tryCommitAt(target, 0L, content), s"concurrent writer created $target")
     0L
   }
@@ -1021,40 +965,33 @@ object DeltaWrite {
     * no data moved. */
   def restore(spark: SparkSession, table: String, toVersion: Long): Long = {
     val tgt = DeltaRead.snapshotInfo(spark, table, toVersion)
-    while (true) {
-      val now = DeltaRead.snapshotInfo(spark, table)
+    commitLoop(spark, table) { now =>
       require(toVersion <= now.version,
         s"cannot restore $table to future version $toVersion (current ${now.version})")
-      if (toVersion == now.version) return now.version
-      val root = s"${table.stripSuffix("/")}/"
-      def rel(p: String) = pctEncodePath(p.stripPrefix(root))
       val nowBy = now.files.map(f => f.path -> f).toMap
       val tgtBy = tgt.files.map(f => f.path -> f).toMap
       val dvChanged = tgt.files.filter(f => nowBy.get(f.path).exists(_.dv != f.dv))
       val removes =
         (now.files.filterNot(f => tgtBy.contains(f.path)) ++ dvChanged).map(f =>
-          removeAction(rel(f.path), dataChange = true))
+          removeAction(relPath(table, f.path), dataChange = true))
       val adds =
         (tgt.files.filterNot(f => nowBy.contains(f.path)) ++ dvChanged).map { f =>
           val st = f.stats.map(s => s""","stats":${jsonStr(s)}""").getOrElse("")
-          s"""{"add":{"path":${jsonStr(rel(f.path))},"partitionValues":${pvJson(f.partitionValues)},""" +
+          s"""{"add":{"path":${jsonStr(relPath(table, f.path))},"partitionValues":${pvJson(f.partitionValues)},""" +
             s""""size":${f.size},"modificationTime":${f.modificationTime},""" +
             s""""dataChange":true$st${f.dv.map(dvActionJson).getOrElse("")}}}"""
         }
       val meta =
         if (tgt.schema != now.schema || tgt.partitionColumns != now.partitionColumns)
-          Seq(metaAction(tgt.schema, tgt.partitionColumns,
-            if (now.metaId.nonEmpty) now.metaId else newTableId(), tgt.configuration))
+          Seq(metaAction(tgt.schema, tgt.partitionColumns, tableId(now), tgt.configuration))
         else Seq.empty
       val actions = meta ++ removes ++ adds
-      // live state already equals the target (e.g. only txn/no-op commits
-      // in between) — nothing to rewrite, and an actionless commit would
-      // be a blank log entry
-      if (actions.isEmpty) return now.version
-      if (tryCommitAt(table, now.version + 1, actions.mkString("", "\n", "\n")))
-        return now.version + 1
+      // at the target already, or live state equals it (e.g. only txn/no-op
+      // commits in between) — nothing to rewrite, and an actionless commit
+      // would be a blank log entry
+      if (toVersion == now.version || actions.isEmpty) None
+      else Some(actions.mkString("", "\n", "\n"))
     }
-    -1L // unreachable
   }
 
   /** SHALLOW CLONE (zero-copy): create a NEW Delta table at `target`
@@ -1077,7 +1014,7 @@ object DeltaWrite {
   def cloneShallow(spark: SparkSession, source: String, target: String,
       version: Long = -1L): Long = {
     val snap = DeltaRead.snapshotInfo(spark, source, version)
-    require(currentVersions(target).isEmpty, s"clone target already exists: $target")
+    require(currentVersions(spark, target).isEmpty, s"clone target already exists: $target")
     // column mapping carries over whole: the metaData action below copies
     // the source's schema (physical-name metadata included) and its
     // configuration (mode + maxColumnId); partitionValues keys are
@@ -1111,15 +1048,31 @@ object DeltaWrite {
     val content = (Seq(proto,
       metaAction(snap.schema, snap.partitionColumns, newTableId(), snap.configuration)) ++
       adds).mkString("", "\n", "\n")
-    Files.createDirectories(logDir(target))
     require(tryCommitAt(target, 0L, content), s"concurrent writer created $target")
     0L
   }
 
+  /** VACUUM: physically delete data and DV files under the table root
+    * that no RETAINED version references — the cleanup half compaction
+    * and overwrite defer (their rewritten-away files stay on disk so
+    * retained-version time travel and spanning incremental reads keep
+    * working). Retention is version-count based in this engine's subset
+    * (`retainLastVersions`, default 1 = current only), the same contract
+    * as the wall-clock retention production Delta uses: time travel (and
+    * adds-only reads whose range starts) BEFORE the horizon fail after a
+    * vacuum — by design, and loudly (missing files). It also reclaims
+    * the orphans of failed or abandoned writes, whose files land under the
+    * table root before any commit claim ([[DataFileWriter]]).
+    *
+    * Only files a Delta writer lays down are candidates (`*.parquet`
+    * data, `deletion_vector_*.bin`); `_delta_log` is never touched, and
+    * foreign files are left alone. Returns the deleted paths. Metadata
+    * only: the referenced set is O(files × retained versions) from log
+    * replay — no data is read. */
   def vacuum(spark: SparkSession, table: String, retainLastVersions: Int = 1,
       minFileAgeMs: Long = 24L * 3600 * 1000,
       dryRun: Boolean = false): Seq[String] = {
-    val versions = currentVersions(table)
+    val versions = currentVersions(spark, table)
     require(versions.nonEmpty, s"not a Delta table: $table")
     val keep = versions.takeRight(math.max(1, retainLastVersions))
     val root = Paths.get(table.stripSuffix("/"))
@@ -1231,14 +1184,14 @@ object DeltaWrite {
           s""""readerFeatures":$fjson,"writerFeatures":$fjson}}""")
       }
     val actions = protoUp ++ withDescriptors.flatMap { case (f, d) =>
-      val rel = pctEncodePath(f.path.stripPrefix(s"${table.stripSuffix("/")}/"))
+      val rel = relPath(table, f.path)
       val off = d.offset.get
       // stats carried VERBATIM through the DV re-add: a deletion vector
       // never touches the physical file, so numRecords stays the physical
       // count and min/max stay valid (possibly non-tight) bounds
       val st = f.stats.map(s => s""","stats":${jsonStr(s)}""").getOrElse("")
       Seq(
-        s"""{"remove":{"path":${jsonStr(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true}}""",
+        removeAction(rel, dataChange = true),
         s"""{"add":{"path":${jsonStr(rel)},"partitionValues":${pvJson(f.partitionValues)},"size":${f.size},""" +
           s""""modificationTime":${f.modificationTime},"dataChange":true$st,""" +
           s""""deletionVector":{"storageType":"u","pathOrInlineDv":${jsonStr(d.pathOrInlineDv)},""" +
@@ -1258,8 +1211,7 @@ object DeltaWrite {
       dvAt0: Map[String, Option[DeletionVectors.Descriptor]],
       affectedPaths: Seq[String]): Long = {
     def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
-    while (true) {
-      val snap = DeltaRead.snapshotInfo(spark, table)
+    commitLoop(spark, table) { snap =>
       val liveNow = snap.files.map(f => norm(f.path) -> f.dv).toMap
       val gone = affectedPaths.filterNot(liveNow.contains)
       require(gone.isEmpty,
@@ -1269,9 +1221,8 @@ object DeltaWrite {
       require(dvMoved.isEmpty,
         s"concurrent deleteWhere updated the deletion vector of ${dvMoved.mkString(",")} " +
           "while this delete ran — rerun against the new snapshot")
-      if (tryCommitAt(table, snap.version + 1, content)) return snap.version + 1
+      Some(content)
     }
-    -1L // unreachable
   }
 
   /** MERGE-style UPSERT: rows of the current snapshot whose `keyCols`
@@ -1287,7 +1238,8 @@ object DeltaWrite {
     * [[deleteWhere]]'s. Nothing O(table) reaches the driver. */
   def upsert(spark: SparkSession, df: DataFrame, table: String,
       keyCols: Seq[String]): Long = {
-    require(currentVersions(table).nonEmpty, s"upsert into non-existent table $table — use append")
+    require(currentVersions(spark, table).nonEmpty,
+      s"upsert into non-existent table $table — use append")
     require(keyCols.nonEmpty && keyCols.forall(df.columns.contains),
       s"key columns ${keyCols.mkString(",")} not all present in ${df.columns.mkString(",")}")
     val snap0 = DeltaRead.snapshotInfo(spark, table)
@@ -1308,10 +1260,7 @@ object DeltaWrite {
     val adds = writeFiles(sdf, table, sparts)
     plan match {
       case None => // pure insert: no DV guard needed, adds commute
-        val content = adds.mkString("", "\n", "\n")
-        var v = currentVersions(table).lastOption.map(_ + 1).getOrElse(0L)
-        while (!tryCommitAt(table, v, content)) v += 1
-        v
+        commitNext(spark, table, adds.mkString("", "\n", "\n"))
       case Some((dvActions, dvAt0, affectedPaths)) =>
         commitDvGuarded(spark, table, (dvActions ++ adds).mkString("", "\n", "\n"),
           dvAt0, affectedPaths)
@@ -1334,7 +1283,8 @@ object DeltaWrite {
     * plus nothing. */
   def applyChanges(spark: SparkSession, changes0: DataFrame, table: String,
       keyCols: Seq[String], txn: Option[(String, Long)] = None): Long = {
-    require(currentVersions(table).nonEmpty, s"applyChanges into non-existent table $table")
+    require(currentVersions(spark, table).nonEmpty,
+      s"applyChanges into non-existent table $table")
     require(changes0.columns.contains("_change_type"),
       "changes must carry _change_type ('insert' | 'delete') — the changesBetween shape")
     // consumed three times (empty probe, DV-delete semi-join, insert
@@ -1365,11 +1315,7 @@ object DeltaWrite {
       s"""{"txn":{"appId":${jsonStr(appId)},"version":$v,"lastUpdated":${System.currentTimeMillis()}}}"""
     }
     plan match {
-      case None =>
-        val content = (txnActions ++ adds).mkString("", "\n", "\n")
-        var v = currentVersions(table).lastOption.map(_ + 1).getOrElse(0L)
-        while (!tryCommitAt(table, v, content)) v += 1
-        v
+      case None => commitNext(spark, table, (txnActions ++ adds).mkString("", "\n", "\n"))
       case Some((dvActions, dvAt0, affectedPaths)) =>
         commitDvGuarded(spark, table,
           (txnActions ++ dvActions ++ adds).mkString("", "\n", "\n"),
@@ -1392,7 +1338,7 @@ object DeltaWrite {
     val rows = ("protocol", null: String, null: Map[String, String], null: String, null: String, 0L, 0L, 0L, none5, null: String) +:
       ("meta", null: String, null: Map[String, String], schemaJson, null: String, 0L, 0L, 0L, none5, null: String) +:
       (snap.files.map { f =>
-        val rel = pctEncodePath(f.path.stripPrefix(s"${table.stripSuffix("/")}/"))
+        val rel = relPath(table, f.path)
         // DV descriptors must survive into the checkpoint or a cleaned log
         // would resurrect every DV-deleted row; stats likewise, or replay
         // from a checkpoint would lose every file's skipping bounds
@@ -1422,11 +1368,9 @@ object DeltaWrite {
         $"ss".as("schemaString"),
         typedLit(snap.partitionColumns).as("partitionColumns"),
         struct(lit("parquet").as("provider")).as("format"),
-        // configuration must survive or a replay-from-checkpoint loses
-        // the column-mapping mode
-        typedLit(if (snap.columnMappingMode == "none") Map.empty[String, String]
-          else Map("delta.columnMapping.mode" -> snap.columnMappingMode))
-          .as("configuration"))).as("metaData"),
+        // the whole configuration survives, or a replay from the checkpoint
+        // loses the column-mapping mode, CHECK constraints and properties
+        typedLit(snap.configuration).as("configuration"))).as("metaData"),
       when($"kind" === "add", struct($"path".as("path"), $"pv".as("partitionValues"),
         $"sz".as("size"), $"mt".as("modificationTime"),
         lit(true).as("dataChange"), $"st".as("stats"),
@@ -1435,11 +1379,17 @@ object DeltaWrite {
           $"dv._3".as("offset"), $"dv._4".as("sizeInBytes"),
           $"dv._5".as("cardinality"))).as("deletionVector"))).as("add"),
       when($"kind" === "txn", struct($"appId".as("appId"), $"tver".as("version"))).as("txn"))
-    val stage = Files.createTempDirectory("graft_delta_cp").toString
-    cp.coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = new java.io.File(stage).listFiles().find(_.getName.endsWith(".parquet")).get
-    Files.move(part.toPath, logDir(table).resolve(f"${snap.version}%020d.checkpoint.parquet"))
-    Files.writeString(logDir(table).resolve("_last_checkpoint"),
+    // staged under a hidden name inside _delta_log (no log listing sees
+    // it), then claimed: readers see the whole checkpoint or none, and a
+    // lost claim means this version is already checkpointed
+    val name = f"${snap.version}%020d.checkpoint.parquet"
+    val stage = logDir(table).resolve(s".$name.${java.util.UUID.randomUUID()}.tmp").toFile
+    try {
+      cp.coalesce(1).write.parquet(stage.toString)
+      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
+      LakeLog.claim(logDir(table), name, part.toPath)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(stage)
+    LakeLog.replace(logDir(table), "_last_checkpoint",
       s"""{"version":${snap.version},"size":${rows.size}}""")
     snap.version
   }

@@ -46,22 +46,39 @@ object IcebergRead {
     decoded.replaceFirst("^[a-zA-Z0-9+.-]+:(//)?", "")
   }
 
-  /** Latest metadata JSON: `version-hint.text` if present, else the
-    * highest-numbered `*.metadata.json` in `metadata/`. */
+  /** The current metadata JSON file ([[currentMetadata]]). */
   private[sources] def metadataFile(table: String): java.io.File = {
     val dir = new java.io.File(s"${table.stripSuffix("/")}/metadata")
     require(dir.isDirectory, s"not an Iceberg table (no metadata dir): $table")
-    val hint = new java.io.File(dir, "version-hint.text")
-    if (hint.isFile) {
-      val v = java.nio.file.Files.readString(hint.toPath).trim
-      val f = new java.io.File(dir, s"v$v.metadata.json")
-      require(f.isFile, s"version-hint points at missing $f")
-      f
-    } else {
-      val candidates = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".metadata.json"))
-      require(candidates.nonEmpty, s"no *.metadata.json under $dir")
-      candidates.maxBy(f => "\\d+".r.findFirstIn(f.getName).map(_.toLong).getOrElse(-1L))
+    val current = currentMetadata(table)
+    require(current.isDefined, s"no *.metadata.json under $dir")
+    current.get._2.toFile
+  }
+
+  /** The table's current metadata version and file, None before its first
+    * commit — the one resolution the reader and [[IcebergWrite]] share.
+    * `version-hint.text` is advisory (each writer sets it after its claim,
+    * and racing writers can leave it behind), so the hinted version is
+    * probed forward, v+1, v+2, …, until a file is missing. Without a
+    * usable hint (missing, unparseable, or naming a missing file) the
+    * highest-numbered `*.metadata.json` is current, per the spec's
+    * file-system table convention. */
+  private[sources] def currentMetadata(table: String): Option[(Int, java.nio.file.Path)] = {
+    import java.nio.file.Files
+    val dir = java.nio.file.Paths.get(table.stripSuffix("/"), "metadata")
+    def file(v: Int) = dir.resolve(s"v$v.metadata.json")
+    scala.util.Try(Files.readString(dir.resolve("version-hint.text")).trim.toInt).toOption
+      .filter(v => Files.isRegularFile(file(v))) match {
+      case Some(hinted) =>
+        var v = hinted
+        while (Files.isRegularFile(file(v + 1))) v += 1
+        Some(v -> file(v))
+      case None =>
+        Option(dir.toFile.listFiles()).getOrElse(Array.empty)
+          .filter(_.getName.endsWith(".metadata.json"))
+          .map(f => ("\\d+".r.findFirstIn(f.getName).flatMap(_.toIntOption).getOrElse(0),
+            f.toPath))
+          .maxByOption(_._1)
     }
   }
 

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
+import com.fasterxml.jackson.databind.node.ObjectNode
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -21,12 +22,13 @@ import scala.jdk.CollectionConverters._
   * create new snapshots; previous snapshots stay readable (time travel
   * by snapshot id).
   *
-  * Commit protocol: the same put-if-absent hard-link claim as the Delta
-  * writer and the engine catalog — exactly one concurrent committer wins
-  * `vN.metadata.json`; the loser re-reads and re-claims N+1 (appends
-  * commute). `version-hint.text` is advisory (last writer wins) — readers
-  * fall back to the highest-numbered metadata file, per the spec's
-  * filesystem-table convention. */
+  * Commit protocol: every `vN.metadata.json` is published by
+  * [[LakeLog.claim]], so exactly one concurrent committer wins each N; the
+  * loser re-reads and re-claims N+1 ([[commitSnapshot]] for snapshots,
+  * [[editMetadata]] for metadata-only commits). The winner then swaps
+  * `version-hint.text` ([[LakeLog.replace]]); the hint is advisory, and
+  * readers and writers resolve the current version through
+  * [[IcebergRead.currentMetadata]]. */
 object IcebergWrite {
 
   private def mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -116,16 +118,50 @@ object IcebergWrite {
         .filter(_._2 > 0).toMap
     }.getOrElse(Map.empty)
 
-  /** Highest committed metadata version, 0 if none. */
-  private def currentVersion(table: String): Int = {
-    val dir = metaDir(table)
-    if (!Files.isDirectory(dir)) return 0
-    val s = Files.list(dir)
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .collect { case n if n.matches("v\\d+\\.metadata\\.json") =>
-        n.stripPrefix("v").stripSuffix(".metadata.json").toInt }
-      .foldLeft(0)(math.max)
-    finally s.close()
+  /** The current metadata version and a private copy of its JSON, None
+    * before the first commit. */
+  private def head(table: String): Option[(Int, ObjectNode)] =
+    IcebergRead.currentMetadata(table).map { case (v, f) =>
+      v -> mapper.readTree(f.toFile).asInstanceOf[ObjectNode]
+    }
+
+  private def existingHead(table: String): (Int, ObjectNode) = {
+    val h = head(table)
+    require(h.isDefined, s"not an Iceberg table: $table")
+    h.get
+  }
+
+  /** Claim metadata version `version` ([[LakeLog.claim]]); the winner then
+    * points `version-hint.text` at it. */
+  private def claimMetadata(table: String, version: Int, json: String): Boolean = {
+    val won = LakeLog.claim(metaDir(table), s"v$version.metadata.json", json)
+    if (won) LakeLog.replace(metaDir(table), "version-hint.text", version.toString)
+    won
+  }
+
+  /** The optimistic loop of every metadata-only commit: `edit` gets a
+    * fresh copy of the current metadata and either changes it and returns
+    * `Right(result)`, which claims the next version, or returns
+    * `Left(result)` to commit nothing. A lost claim re-reads and re-edits. */
+  @scala.annotation.tailrec
+  private def editMetadata[T](table: String)(edit: ObjectNode => Either[T, T]): T = {
+    val (base, meta) = existingHead(table)
+    edit(meta) match {
+      case Left(result) => result
+      case Right(result) =>
+        meta.put("last-updated-ms", System.currentTimeMillis())
+        if (claimMetadata(table, base + 1, mapper.writeValueAsString(meta))) result
+        else editMetadata(table)(edit)
+    }
+  }
+
+  /** The retry loop of rewrites whose whole commit derives from one base
+    * version ([[commitSnapshot]]'s `expectBase`): an attempt returns None
+    * when a concurrent commit moved the base, and runs again. */
+  @scala.annotation.tailrec
+  private def rederive(attempt: => Option[Long]): Long = attempt match {
+    case Some(id) => id
+    case None => rederive(attempt)
   }
 
   // --- Avro schemas, field-ids per the Iceberg spec's manifest tables ---
@@ -334,11 +370,8 @@ object IcebergWrite {
     Files.writeString(out, om.writeValueAsString(root))
   }
 
-  private def readPrior(table: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val v = currentVersion(table)
-    if (v == 0) None
-    else Some(mapper.readTree(metaDir(table).resolve(s"v$v.metadata.json").toFile))
-  }
+  private def readPrior(table: String): Option[com.fasterxml.jackson.databind.JsonNode] =
+    head(table).map(_._2)
 
   /** The table's default-spec partitioning as append-ready `partitionBy`
     * strings — what an INSERT INTO inherits. Empty for an unpartitioned
@@ -349,8 +382,8 @@ object IcebergWrite {
   /** Optimistic-claim commit shared by [[append]] and [[deleteWhere]]:
     * each attempt re-reads the prior state (so a lost race carries the
     * winner's snapshots forward), authors this snapshot's manifest +
-    * manifest list + metadata JSON, and claims `vN.metadata.json` by
-    * put-if-absent hard link. `authorManifest(snapshotId)` returns
+    * manifest list + metadata JSON, and claims `vN.metadata.json`
+    * ([[claimMetadata]]). `authorManifest(snapshotId)` returns
     * (manifestPath, length, content, specId, addedFiles, addedRows);
     * `fieldsJson` renders the schema `fields` array and `specsJson` the
     * `partition-specs` array (+ default-spec-id, last-partition-id), both
@@ -365,21 +398,21 @@ object IcebergWrite {
       expectBase: Option[Int] = None,
       stagedRef: Option[String] = None): Long = {
     def jstr(s: String) = mapper.writeValueAsString(s)
-    while (true) {
+    @scala.annotation.tailrec
+    def attempt(): Long = {
+      // ONE version read, prior derived from exactly that version — a
+      // second read here would race a concurrent winner (read prior at N,
+      // see version N+1, claim N+2 carrying only N's manifests → the
+      // winner's snapshot silently dropped; caught by the
+      // concurrent-appender spec)
+      val current = head(table)
+      val base = current.map(_._1).getOrElse(0)
+      val prior: Option[com.fasterxml.jackson.databind.JsonNode] = current.map(_._2)
       // expectBase: the caller derived state (e.g. compaction's kept-entry
       // list) from a specific version — retrying past a concurrent commit
       // would silently drop the winner's files; abort with -1 so the
       // caller re-derives instead
-      expectBase.foreach(b => if (currentVersion(table) != b) return -1L)
-      // ONE version read, prior derived from exactly that version — a
-      // second currentVersion() call here would race a concurrent winner
-      // (read prior at N, see version N+1, claim N+2 carrying only N's
-      // manifests → the winner's snapshot silently dropped; caught by the
-      // concurrent-appender spec)
-      val base = currentVersion(table)
-      val prior: Option[com.fasterxml.jackson.databind.JsonNode] =
-        if (base == 0) None
-        else Some(mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile))
+      if (expectBase.exists(_ != base)) return -1L
       val version = base + 1
       val snapshotId = version.toLong
       Files.createDirectories(metaDir(table))
@@ -458,25 +491,16 @@ object IcebergWrite {
            |"snapshots":[${(priorSnaps :+ snapJson).mkString(",")}]}"""
           .stripMargin.replaceAll("\n", "")
 
-      val tmp = Files.createTempFile(metaDir(table), "meta", ".tmp")
-      val won =
-        try {
-          Files.writeString(tmp, metaJson)
-          Files.createLink(metaDir(table).resolve(s"v$version.metadata.json"), tmp)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        } finally Files.delete(tmp)
-      if (won) {
-        Files.writeString(metaDir(table).resolve("version-hint.text"), version.toString)
-        return snapshotId
+      if (claimMetadata(table, version, metaJson)) snapshotId
+      else {
+        // lost the race: drop this attempt's manifest/list and re-author
+        // against the winner's state (data files stay — they are re-added)
+        Files.deleteIfExists(manifestPath)
+        Files.deleteIfExists(mlPath)
+        attempt()
       }
-      // lost the race: drop this attempt's manifest/list and re-author
-      // against the winner's state (data files stay — they are re-added)
-      Files.deleteIfExists(manifestPath)
-      Files.deleteIfExists(mlPath)
     }
-    -1L // unreachable
+    attempt()
   }
 
   /** The full `schemas` array (+ current-schema-id, last-column-id)
@@ -763,14 +787,10 @@ object IcebergWrite {
     * incremental consumers see exactly one new commit at publish time —
     * never the unaudited intermediate state. */
   def fastForward(spark: SparkSession, table: String, branch: String,
-      dropBranch: Boolean = true): Long = {
-    while (true) {
-      val base = currentVersion(table)
-      require(base > 0, s"not an Iceberg table: $table")
-      val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
-        .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+      dropBranch: Boolean = true): Long =
+    editMetadata(table) { prior =>
       val refs = Option(prior.get("refs"))
-        .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
+        .collect { case o: ObjectNode => o }
         .getOrElse(throw new IllegalArgumentException(s"no refs on $table"))
       val refNode = Option(refs.get(branch)).getOrElse(
         throw new IllegalArgumentException(s"no ref '$branch' on $table"))
@@ -778,26 +798,25 @@ object IcebergWrite {
         s"'$branch' is a ${refNode.path("type").asText()}, not a branch")
       val staged = refNode.path("snapshot-id").asLong(-1L)
       val head = prior.path("current-snapshot-id").asLong(-1L)
-      if (staged == head) return staged // already published
-      val snapNode = prior.path("snapshots").elements().asScala
-        .find(_.path("snapshot-id").asLong(-2L) == staged)
-        .getOrElse(throw new IllegalArgumentException(
-          s"branch '$branch' points at unknown snapshot $staged"))
-      require(snapNode.path("parent-snapshot-id").asLong(-1L) == head,
-        s"cannot fast-forward: staged snapshot $staged was written against " +
-          s"parent ${snapNode.path("parent-snapshot-id").asLong(-1L)} but the head " +
-          s"is now $head — main advanced during the audit; re-stage against it")
-      prior.put("current-snapshot-id", staged)
-      prior.path("snapshot-log")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-        .add(mapper.readTree(
-          s"""{"timestamp-ms":${System.currentTimeMillis()},"snapshot-id":$staged}"""))
-      if (dropBranch) refs.remove(branch)
-      prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return staged
+      if (staged == head) Left(staged) // already published
+      else {
+        val snapNode = prior.path("snapshots").elements().asScala
+          .find(_.path("snapshot-id").asLong(-2L) == staged)
+          .getOrElse(throw new IllegalArgumentException(
+            s"branch '$branch' points at unknown snapshot $staged"))
+        require(snapNode.path("parent-snapshot-id").asLong(-1L) == head,
+          s"cannot fast-forward: staged snapshot $staged was written against " +
+            s"parent ${snapNode.path("parent-snapshot-id").asLong(-1L)} but the head " +
+            s"is now $head — main advanced during the audit; re-stage against it")
+        prior.put("current-snapshot-id", staged)
+        prior.path("snapshot-log")
+          .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+          .add(mapper.readTree(
+            s"""{"timestamp-ms":${System.currentTimeMillis()},"snapshot-id":$staged}"""))
+        if (dropBranch) refs.remove(branch)
+        Right(staged)
+      }
     }
-    -1L // unreachable
-  }
 
   /** PARTITION-SPEC EVOLUTION (the spec's marquee capability): a NEW spec
     * joins `partition-specs` under a fresh spec-id and becomes the
@@ -815,11 +834,7 @@ object IcebergWrite {
   def evolvePartitionSpec(spark: SparkSession, table: String,
       newPartitionBy: Seq[String]): Unit = {
     def jstr(s: String) = mapper.writeValueAsString(s)
-    while (true) {
-      val base = currentVersion(table)
-      require(base > 0, s"not an Iceberg table: $table")
-      val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
-        .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+    editMetadata(table) { prior =>
       require(priorPartitionBy(prior) != newPartitionBy,
         s"table is already partitioned by $newPartitionBy")
       val cur = currentSchemaNode(prior)
@@ -840,8 +855,7 @@ object IcebergWrite {
         .add(mapper.readTree(s"""{"spec-id":$newSpecId,"fields":[$fields]}"""))
       prior.put("default-spec-id", newSpecId)
       prior.put("last-partition-id", lastPartId + transforms.size)
-      prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return
+      Right(())
     }
   }
 
@@ -873,21 +887,10 @@ object IcebergWrite {
       curve: String = "z"): Long = {
     require(curve == "z" || curve == "hilbert",
       s"unknown clustering curve '$curve' (z | hilbert)")
-    // a valid table with metadata but NO snapshots yet has nothing to
-    // compact — and its current-snapshot-id (-1) would collide with the
-    // lost-race sentinel below, spinning the loop forever
-    val v0 = currentVersion(table)
-    require(v0 > 0, s"not an Iceberg table: $table")
-    val cur0 = mapper.readTree(metaDir(table).resolve(s"v$v0.metadata.json").toFile)
-      .path("current-snapshot-id").asLong(-1L)
-    if (cur0 < 0) return cur0
     // optimistic outer loop: ALL state (kept entries, candidates) derives
     // from one observed version; a concurrent commit aborts the claim
     // (expectBase) and re-derives here rather than dropping the winner
-    var attempt = compactOnce(spark, table, smallFileBytes, targetFileBytes, zorderBy, where, curve)
-    while (attempt < 0)
-      attempt = compactOnce(spark, table, smallFileBytes, targetFileBytes, zorderBy, where, curve)
-    attempt
+    rederive(compactOnce(spark, table, smallFileBytes, targetFileBytes, zorderBy, where, curve))
   }
 
   /** A live data-file manifest entry with its lineage and carried raw
@@ -996,10 +999,8 @@ object IcebergWrite {
 
   private def compactOnce(spark: SparkSession, table: String,
       smallFileBytes: Long, targetFileBytes: Long, zorderBy: Seq[String],
-      where: Option[String] = None, curve: String = "z"): Long = {
-    val base = currentVersion(table)
-    require(base > 0, s"not an Iceberg table: $table")
-    val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
+      where: Option[String] = None, curve: String = "z"): Option[Long] = {
+    val (base, prior) = existingHead(table)
     val partitionBy = priorPartitionBy(prior)
     val transforms = partitionBy.map(IcebergTransforms.parse)
 
@@ -1026,7 +1027,8 @@ object IcebergWrite {
           val small = es.filter(_.bytes < smallFileBytes)
           if (small.size >= 2) small else Nil
         }.toSeq
-    if (rewrite.isEmpty) return prior.path("current-snapshot-id").asLong(-1L)
+    // nothing to do (also a table with no snapshot yet): no commit
+    if (rewrite.isEmpty) return Some(prior.path("current-snapshot-id").asLong(-1L))
     val rewritten = rewrite.map(_.path).toSet
     val keep = entries.filterNot(e => rewritten(e.path))
 
@@ -1049,7 +1051,7 @@ object IcebergWrite {
     val partTypes: Seq[(String, DataType)] =
       transforms.map(t => t.fieldName -> t.resultType(df.schema(t.source).dataType))
 
-    commitSnapshot(table, "replace",
+    Some(commitSnapshot(table, "replace",
       schemasJson = carriedSchemas,
       specsJson = carriedSpecs,
       authorManifest =
@@ -1057,7 +1059,7 @@ object IcebergWrite {
       // the new manifest carries every live data file; prior data
       // manifests are dropped, and delete manifests too when purged
       carryPrior = _ => Nil,
-      expectBase = Some(base))
+      expectBase = Some(base))).filter(_ >= 0)
   }
 
   /** Author ONE manifest holding `keep`'s existing entries (lineage and
@@ -1129,17 +1131,6 @@ object IcebergWrite {
       newFiles.size, newFiles.map(_.rows).sum)
   }
 
-  /** PARTITION-SCOPED OVERWRITE (`replaceWhere`), the [[DeltaWrite
-    * .replaceWhere]] twin over IDENTITY partitions: one `overwrite`
-    * snapshot whose single manifest carries every out-of-scope entry
-    * verbatim (lineage + raw bounds) plus the staged incoming files —
-    * files in non-matching partitions are untouched on disk AND keep their
-    * manifest lineage. Every incoming row must satisfy `where` (one
-    * distributed count), or rows outside the replaced scope would double
-    * with their still-live copies. Live delete files are refused (a
-    * delete file can span partitions — compact first, same rule as scoped
-    * maintenance). Optimistic via expectBase: a concurrent commit
-    * re-derives the kept set rather than dropping the winner's files. */
   /** Whole-table OVERWRITE: one atomic `overwrite` snapshot replacing ALL
     * live data (and any live delete files — nothing they scoped survives)
     * with `df` — the INSERT OVERWRITE twin of [[DeltaWrite.overwrite]].
@@ -1147,8 +1138,7 @@ object IcebergWrite {
     * time-travelable until expireSnapshots. Optimistic like the other
     * commits: a raced claim re-derives against the new head. */
   def overwrite(spark: SparkSession, df: DataFrame, table: String): Long = {
-    require(currentVersion(table) > 0, s"not an Iceberg table: $table")
-    val tableFields = currentSchemaNode(readPrior(table).get).path("fields")
+    val tableFields = currentSchemaNode(existingHead(table)._2).path("fields")
       .elements().asScala.map(_.path("name").asText()).toSeq
     require(tableFields.sorted == df.schema.fieldNames.toSeq.sorted,
       s"overwrite schema ${df.schema.fieldNames.mkString(",")} does not match " +
@@ -1162,33 +1152,40 @@ object IcebergWrite {
           s"${f.dataType} — cast before writing (a mismatched file " +
           "would be misread under the table schema)")
     }
-    var v = -1L
-    while (v < 0) {
-      val base = currentVersion(table)
-      val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
+    rederive {
+      val (base, prior) = existingHead(table)
       val partitionBy = priorPartitionBy(prior)
       val transforms = partitionBy.map(IcebergTransforms.parse)
       val partTypes: Seq[(String, DataType)] =
         transforms.map(t => t.fieldName -> t.resultType(df.schema(t.source).dataType))
-      v = commitSnapshot(table, "overwrite",
+      Some(commitSnapshot(table, "overwrite",
         schemasJson = carriedSchemas,
         specsJson = carriedSpecs,
         authorManifest =
           authorKeptPlusNew(table, prior, Nil, df, transforms, partTypes),
         carryPrior = _ => Nil,
-        expectBase = Some(base))
+        expectBase = Some(base))).filter(_ >= 0)
     }
-    v
   }
 
+  /** PARTITION-SCOPED OVERWRITE (`replaceWhere`), the [[DeltaWrite
+    * .replaceWhere]] twin over IDENTITY partitions: one `overwrite`
+    * snapshot whose single manifest carries every out-of-scope entry
+    * verbatim (lineage + raw bounds) plus the staged incoming files —
+    * files in non-matching partitions are untouched on disk AND keep their
+    * manifest lineage. Every incoming row must satisfy `where` (one
+    * distributed count), or rows outside the replaced scope would double
+    * with their still-live copies. Live delete files are refused (a
+    * delete file can span partitions — compact first, same rule as scoped
+    * maintenance). Optimistic via expectBase: a concurrent commit
+    * re-derives the kept set rather than dropping the winner's files. */
   def replaceWhere(spark: SparkSession, df: DataFrame, table: String,
       where: String): Long = {
     import org.apache.spark.sql.functions.{coalesce => fcoalesce, expr => fexpr, lit => flit, not => fnot}
-    require(currentVersion(table) > 0, s"not an Iceberg table: $table")
     // same field-name pinning as the Delta twin: a frame with extra /
     // missing / renamed columns would stage files whose schema silently
     // diverges from the table metadata (id-mapped readers surface nulls)
-    val tableFields = currentSchemaNode(readPrior(table).get).path("fields")
+    val tableFields = currentSchemaNode(existingHead(table)._2).path("fields")
       .elements().asScala.map(_.path("name").asText()).toSeq
     require(tableFields.sorted == df.schema.fieldNames.toSeq.sorted,
       s"replaceWhere schema ${df.schema.fieldNames.mkString(",")} does not match " +
@@ -1197,15 +1194,12 @@ object IcebergWrite {
     require(strays == 0L,
       s"replaceWhere: $strays incoming row(s) do not satisfy '$where' — rows " +
         "outside the replaced scope would duplicate their live copies")
-    var attempt = replaceWhereOnce(spark, df, table, where)
-    while (attempt < 0) attempt = replaceWhereOnce(spark, df, table, where)
-    attempt
+    rederive(replaceWhereOnce(spark, df, table, where))
   }
 
   private def replaceWhereOnce(spark: SparkSession, df: DataFrame, table: String,
-      where: String): Long = {
-    val base = currentVersion(table)
-    val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
+      where: String): Option[Long] = {
+    val (base, prior) = existingHead(table)
     val partitionBy = priorPartitionBy(prior)
     val transforms = partitionBy.map(IcebergTransforms.parse)
     val (entries, hasDeletes) = liveDataEntries(prior, "replaceWhere")
@@ -1216,13 +1210,13 @@ object IcebergWrite {
     val keep = entries.filterNot(inScope)
     val partTypes: Seq[(String, DataType)] =
       transforms.map(t => t.fieldName -> t.resultType(df.schema(t.source).dataType))
-    commitSnapshot(table, "overwrite",
+    Some(commitSnapshot(table, "overwrite",
       schemasJson = carriedSchemas,
       specsJson = carriedSpecs,
       authorManifest =
         authorKeptPlusNew(table, prior, keep, df, transforms, partTypes),
       carryPrior = _ => Nil,
-      expectBase = Some(base))
+      expectBase = Some(base))).filter(_ >= 0)
   }
 
   /** SQL-UPDATE, the [[DeltaWrite.updateWhere]] twin: rows matching
@@ -1245,10 +1239,8 @@ object IcebergWrite {
     import org.apache.spark.sql.functions.{col => fcol}
     require(assignments.nonEmpty, "updateWhere with no assignments")
     def scoped(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
-    while (true) {
-      val base = currentVersion(table)
-      val prior = readPrior(table)
-      require(prior.isDefined, s"not an Iceberg table: $table")
+    rederive {
+      val (base, prior) = existingHead(table)
       val snapDf = IcebergRead.snapshot(spark, table)
       val byName = assignments.toMap
       val cols = snapDf.schema.fieldNames.toSet
@@ -1261,60 +1253,43 @@ object IcebergWrite {
         .select(snapDf.schema.fields.toSeq.map { f =>
           byName.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(fcol(f.name))
         }: _*).localCheckpoint()
-      if (updated.isEmpty) return prior.get.path("current-snapshot-id").asLong(-1L)
+      if (updated.isEmpty) Some(prior.path("current-snapshot-id").asLong(-1L))
+      else {
+        // old images → one sorted (file_path, pos) delete file, exactly like
+        // [[deleteWhere]]'s; non-empty because the updated images are
+        val deleteFile = writePositionDeletes(table, scoped(pruned).where(condition)).get
 
-      // old images → one sorted (file_path, pos) delete file, exactly like
-      // [[deleteWhere]]'s; non-empty because the updated images are
-      val deleteFile = writePositionDeletes(table, scoped(pruned).where(condition)).get
-
-      val (emptySpecId, mintEmptySpec) = emptySpecFor(prior.get)
-      val partitionBy = priorPartitionBy(prior.get)
-      val transforms = partitionBy.map(IcebergTransforms.parse)
-      val partTypes: Seq[(String, DataType)] =
-        transforms.map(t => t.fieldName -> t.resultType(updated.schema(t.source).dataType))
-      // the delete manifest is authored inside authorManifest (it needs
-      // the snapshot id) and joins the manifest list through carryPrior —
-      // one list, one snapshot, both halves atomic
-      var deleteManifest: (String, Long, Int, Int) = null
-      val committed = commitSnapshot(table, "overwrite",
-        schemasJson = carriedSchemas,
-        specsJson = p => {
-          val (specs, defaultId, lastPartId) = carriedSpecs(p)
-          if (!mintEmptySpec) (specs, defaultId, lastPartId)
-          else (s"""$specs,{"spec-id":$emptySpecId,"fields":[]}""", defaultId, lastPartId)
-        },
-        authorManifest = { snapshotId =>
-          val (dmPath, dmLen) = deleteFilesManifest(table, Seq(deleteFile), 1, Nil, snapshotId)
-          deleteManifest = (dmPath.toString, dmLen, 1, emptySpecId)
-          authorKeptPlusNew(table, prior.get, Seq.empty, updated,
-            transforms, partTypes)(snapshotId)
-        },
-        carryPrior = ms => ms :+ deleteManifest,
-        expectBase = Some(base))
-      if (committed >= 0) return committed
-      Files.deleteIfExists(Paths.get(deleteFile.path)) // lost the race: re-derive everything
+        val (emptySpecId, mintEmptySpec) = emptySpecFor(prior)
+        val partitionBy = priorPartitionBy(prior)
+        val transforms = partitionBy.map(IcebergTransforms.parse)
+        val partTypes: Seq[(String, DataType)] =
+          transforms.map(t => t.fieldName -> t.resultType(updated.schema(t.source).dataType))
+        // the delete manifest is authored inside authorManifest (it needs
+        // the snapshot id) and joins the manifest list through carryPrior —
+        // one list, one snapshot, both halves atomic
+        var deleteManifest: (String, Long, Int, Int) = null
+        val committed = commitSnapshot(table, "overwrite",
+          schemasJson = carriedSchemas,
+          specsJson = p => {
+            val (specs, defaultId, lastPartId) = carriedSpecs(p)
+            if (!mintEmptySpec) (specs, defaultId, lastPartId)
+            else (s"""$specs,{"spec-id":$emptySpecId,"fields":[]}""", defaultId, lastPartId)
+          },
+          authorManifest = { snapshotId =>
+            val (dmPath, dmLen) = deleteFilesManifest(table, Seq(deleteFile), 1, Nil, snapshotId)
+            deleteManifest = (dmPath.toString, dmLen, 1, emptySpecId)
+            authorKeptPlusNew(table, prior, Seq.empty, updated,
+              transforms, partTypes)(snapshotId)
+          },
+          carryPrior = ms => ms :+ deleteManifest,
+          expectBase = Some(base))
+        // lost the race: re-derive everything
+        if (committed < 0) Files.deleteIfExists(Paths.get(deleteFile.path))
+        Some(committed).filter(_ >= 0)
+      }
     }
-    -1L // unreachable
   }
 
-  /** EXPIRE SNAPSHOTS + physical cleanup: drop all but the last
-    * `retainLast` snapshots (the current one always survives) from the
-    * metadata — committed as v(base+1) metadata JSON via the same
-    * put-if-absent claim as every other commit — then delete the data
-    * files, manifests, and manifest lists only expired snapshots
-    * referenced. Time travel to an expired snapshot fails loudly
-    * afterwards (its id is gone from the metadata); retained history and
-    * the current state are untouched. Returns the deleted file paths.
-    *
-    * The referenced set is the union over RETAINED snapshots of their
-    * manifest-list → manifest → `file_path` closure, all entry statuses
-    * included — a file marked DELETED in one retained snapshot can still
-    * be live in an older retained one, so only full absence makes a file
-    * reclaimable. Foreign files under the table root are left alone;
-    * orphans of failed or abandoned writes (their files land under data/
-    * before any commit claim, [[DataFileWriter]]) are reclaimed with the
-    * first expiration after them.
-    * Metadata-only: O(manifests) driver reads, no data scanned. */
   /** UNIFORM-STYLE EXPORT (zero-copy cross-format): create a NEW Iceberg
     * table at `target` whose single append snapshot references the DELTA
     * table's live parquet files by absolute path — no data copied; any
@@ -1335,7 +1310,7 @@ object IcebergWrite {
     * every zero-copy reference design. */
   def exportDeltaAsIceberg(spark: SparkSession, source: String, target: String): Long = {
     val snap = DeltaRead.snapshotInfo(spark, source)
-    require(currentVersion(target) == 0, s"export target already exists: $target")
+    require(IcebergRead.currentMetadata(target).isEmpty, s"export target already exists: $target")
     require(snap.columnMappingMode == "none",
       "column-mapped Delta tables are not exportable (files carry physical names)")
     require(snap.files.forall(_.dv.isEmpty),
@@ -1476,12 +1451,8 @@ object IcebergWrite {
     * schemas chain under a fresh schema-id (old snapshots keep citing
     * theirs), and a new metadata version is claimed race-safely. */
   private def evolveCurrentSchema(table: String, what: String,
-      newFields: com.fasterxml.jackson.databind.JsonNode => Seq[String]): Unit = {
-    while (true) {
-      val base = currentVersion(table)
-      require(base > 0, s"not an Iceberg table: $table")
-      val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
-        .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+      newFields: com.fasterxml.jackson.databind.JsonNode => Seq[String]): Unit =
+    editMetadata(table) { prior =>
       val cur = currentSchemaNode(prior)
       val fields = newFields(cur)
       val newId = prior.path("schemas").elements().asScala
@@ -1491,29 +1462,21 @@ object IcebergWrite {
       prior.path("schemas").asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
         .add(evolved)
       prior.put("current-schema-id", newId)
-      prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return
+      Right(())
     }
-  }
 
   /** SET table properties — a metadata-only version bump (no snapshot):
     * merges `props` into the metadata's `properties` object, which data
     * commits now carry verbatim. The ANALYZE-stats persistence slot. */
   def setProperties(spark: SparkSession, table: String,
-      props: Map[String, String]): Unit = {
-    while (true) {
-      val base = currentVersion(table)
-      require(base > 0, s"not an Iceberg table: $table")
-      val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
-        .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+      props: Map[String, String]): Unit =
+    editMetadata(table) { prior =>
       val node = Option(prior.get("properties"))
-        .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
-        .getOrElse { val o = mapper.createObjectNode(); prior.set[com.fasterxml.jackson.databind.JsonNode]("properties", o); o }
+        .collect { case o: ObjectNode => o }
+        .getOrElse(prior.putObject("properties"))
       props.foreach { case (k, v) => node.put(k, v) }
-      prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return
+      Right(())
     }
-  }
 
   /** Field ids referenced by the current snapshot's live equality-delete
     * files — O(delete manifests) driver metadata. */
@@ -1551,68 +1514,31 @@ object IcebergWrite {
       snapshotId: Long = -1L, refType: String = "tag"): Long = {
     require(refType == "tag" || refType == "branch",
       s"ref type must be 'tag' or 'branch', got '$refType'")
-    while (true) {
-      val base = currentVersion(table)
-      require(base > 0, s"not an Iceberg table: $table")
-      val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
-        .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+    editMetadata(table) { prior =>
       val id = if (snapshotId >= 0) snapshotId
         else prior.path("current-snapshot-id").asLong(-1L)
       require(prior.path("snapshots").elements().asScala
           .exists(_.path("snapshot-id").asLong(-1L) == id),
         s"snapshot $id not found in $table")
       val refs = Option(prior.get("refs"))
-        .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
-        .getOrElse {
-          val o = mapper.createObjectNode()
-          prior.set[com.fasterxml.jackson.databind.JsonNode]("refs", o)
-          o
-        }
-      val entry = mapper.createObjectNode()
+        .collect { case o: ObjectNode => o }
+        .getOrElse(prior.putObject("refs"))
+      val entry = refs.putObject(name)
       entry.put("snapshot-id", id)
       entry.put("type", refType)
-      refs.set[com.fasterxml.jackson.databind.JsonNode](name, entry)
-      prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return id
+      Right(id)
     }
-    -1L // unreachable
   }
 
   /** Drop a named ref; its snapshot becomes expirable again. No-op if the
     * name is absent. */
-  def dropRef(spark: SparkSession, table: String, name: String): Unit = {
-    while (true) {
-      val base = currentVersion(table)
-      require(base > 0, s"not an Iceberg table: $table")
-      val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
-        .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+  def dropRef(spark: SparkSession, table: String, name: String): Unit =
+    editMetadata(table) { prior =>
       Option(prior.get("refs")) match {
-        case Some(o: com.fasterxml.jackson.databind.node.ObjectNode) if o.has(name) =>
-          o.remove(name)
-          prior.put("last-updated-ms", System.currentTimeMillis())
-          if (writeMetaVersion(table, base + 1, prior)) return
-        case _ => return
+        case Some(o: ObjectNode) if o.has(name) => o.remove(name); Right(())
+        case _ => Left(())
       }
     }
-  }
-
-  /** Race-safe metadata-version write (create-link claim, version-hint on
-    * win) — the commit tail shared by ref edits and rollback. */
-  private def writeMetaVersion(table: String, version: Int,
-      node: com.fasterxml.jackson.databind.JsonNode): Boolean = {
-    val dir = metaDir(table)
-    val tmp = Files.createTempFile(dir, "meta", ".tmp")
-    val won =
-      try {
-        Files.writeString(tmp, mapper.writeValueAsString(node))
-        Files.createLink(dir.resolve(s"v$version.metadata.json"), tmp)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      } finally Files.delete(tmp)
-    if (won) Files.writeString(dir.resolve("version-hint.text"), version.toString)
-    won
-  }
 
   /** ROLLBACK: make `toSnapshotId` the current snapshot again by writing
     * a new metadata version whose lineage is TRUNCATED at the target —
@@ -1624,47 +1550,42 @@ object IcebergWrite {
     * [[expireSnapshots]] reclaims them. The next append's snapshot id
     * continues from the metadata version counter, so dropped ids are
     * never reused. O(1) driver metadata write. */
-  def rollback(spark: SparkSession, table: String, toSnapshotId: Long): Long = {
-    while (true) {
-      val base = currentVersion(table)
-      require(base > 0, s"not an Iceberg table: $table")
-      val prior = mapper.readTree(metaDir(table).resolve(s"v$base.metadata.json").toFile)
-        .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+  def rollback(spark: SparkSession, table: String, toSnapshotId: Long): Long =
+    editMetadata(table) { prior =>
       val cur = prior.path("current-snapshot-id").asLong(-1L)
-      if (cur == toSnapshotId) return toSnapshotId // already there
-      val snaps = prior.path("snapshots").elements().asScala.toSeq
-      require(snaps.exists(_.path("snapshot-id").asLong(-1L) == toSnapshotId),
-        s"snapshot $toSnapshotId not found in $table")
-      // truncate the log at the target; keep only snapshots the kept log
-      // still references (plus any the log never covered — conservative)
-      val log = prior.path("snapshot-log").elements().asScala.toSeq
-      val cut = log.lastIndexWhere(_.path("snapshot-id").asLong(-1L) == toSnapshotId)
-      // target missing from the log (e.g. log-expired, parent-chain-only
-      // table): keep everything — conservative, order still resolvable
-      val keptLog = if (cut >= 0) log.take(cut + 1) else log
-      val keptIds = keptLog.map(_.path("snapshot-id").asLong(-1L)).toSet
-      // named refs protect their snapshots through a rollback (tags are
-      // reproducibility pins; a rollback must not sever them)
-      val refIds: Set[Long] = Option(prior.get("refs"))
-        .map(_.elements().asScala.map(_.path("snapshot-id").asLong(-1L)).toSet)
-        .getOrElse(Set.empty)
-      val dropped: Set[Long] =
-        if (cut < 0) Set.empty
-        else log.map(_.path("snapshot-id").asLong(-1L)).toSet --
-          keptIds -- refIds - toSnapshotId
-      val keptSnaps = snaps.filterNot(s => dropped(s.path("snapshot-id").asLong(-1L)))
-      val snapArr = mapper.createArrayNode()
-      keptSnaps.foreach(s => snapArr.add(s))
-      val logArr = mapper.createArrayNode()
-      keptLog.foreach(e => logArr.add(e))
-      prior.set[com.fasterxml.jackson.databind.JsonNode]("snapshots", snapArr)
-      prior.set[com.fasterxml.jackson.databind.JsonNode]("snapshot-log", logArr)
-      prior.put("current-snapshot-id", toSnapshotId)
-      prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return toSnapshotId
+      if (cur == toSnapshotId) Left(toSnapshotId) // already there
+      else {
+        val snaps = prior.path("snapshots").elements().asScala.toSeq
+        require(snaps.exists(_.path("snapshot-id").asLong(-1L) == toSnapshotId),
+          s"snapshot $toSnapshotId not found in $table")
+        // truncate the log at the target; keep only snapshots the kept log
+        // still references (plus any the log never covered — conservative)
+        val log = prior.path("snapshot-log").elements().asScala.toSeq
+        val cut = log.lastIndexWhere(_.path("snapshot-id").asLong(-1L) == toSnapshotId)
+        // target missing from the log (e.g. log-expired, parent-chain-only
+        // table): keep everything — conservative, order still resolvable
+        val keptLog = if (cut >= 0) log.take(cut + 1) else log
+        val keptIds = keptLog.map(_.path("snapshot-id").asLong(-1L)).toSet
+        // named refs protect their snapshots through a rollback (tags are
+        // reproducibility pins; a rollback must not sever them)
+        val refIds: Set[Long] = Option(prior.get("refs"))
+          .map(_.elements().asScala.map(_.path("snapshot-id").asLong(-1L)).toSet)
+          .getOrElse(Set.empty)
+        val dropped: Set[Long] =
+          if (cut < 0) Set.empty
+          else log.map(_.path("snapshot-id").asLong(-1L)).toSet --
+            keptIds -- refIds - toSnapshotId
+        val keptSnaps = snaps.filterNot(s => dropped(s.path("snapshot-id").asLong(-1L)))
+        val snapArr = mapper.createArrayNode()
+        keptSnaps.foreach(s => snapArr.add(s))
+        val logArr = mapper.createArrayNode()
+        keptLog.foreach(e => logArr.add(e))
+        prior.set[com.fasterxml.jackson.databind.JsonNode]("snapshots", snapArr)
+        prior.set[com.fasterxml.jackson.databind.JsonNode]("snapshot-log", logArr)
+        prior.put("current-snapshot-id", toSnapshotId)
+        Right(toSnapshotId)
+      }
     }
-    -1L // unreachable
-  }
 
   /** SHALLOW CLONE (zero-copy): create a NEW Iceberg table at `target`
     * whose single snapshot is the SOURCE's chosen snapshot VERBATIM — the
@@ -1680,9 +1601,10 @@ object IcebergWrite {
     * version number is seeded at the cloned snapshot id (sequential-id
     * tables — ours — can then append with no id collision); external
     * tables with non-sequential ids seed at 1 and the vanishingly-unlikely
-    * id collision is rejected by the commit's create-link. Source
-    * expiration is the one shared-fate hazard, as in every shallow-clone
-    * design. */
+    * id collision is rejected by the commit's claim. A target that already
+    * holds a table, or that a concurrent clone claims first, is refused.
+    * Source expiration is the one shared-fate hazard, as in every
+    * shallow-clone design. */
   def cloneShallow(spark: SparkSession, source: String, target: String,
       snapshotId: Long = -1L): Long = {
     val src = mapper.readTree(IcebergRead.metadataFile(source))
@@ -1713,137 +1635,114 @@ object IcebergWrite {
     src.set[com.fasterxml.jackson.databind.JsonNode]("snapshot-log", log)
     src.set[com.fasterxml.jackson.databind.JsonNode]("metadata-log", mapper.createArrayNode())
     val version = if (cur >= 1 && cur <= 1000000L) cur.toInt else 1
-    val dir = metaDir(target)
-    require(currentVersion(target) == 0, s"clone target already exists: $target")
-    Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, "meta", ".tmp")
-    try {
-      Files.writeString(tmp, mapper.writeValueAsString(src))
-      Files.createLink(dir.resolve(s"v$version.metadata.json"), tmp)
-    } finally Files.delete(tmp)
-    Files.writeString(dir.resolve("version-hint.text"), version.toString)
+    require(IcebergRead.currentMetadata(target).isEmpty, s"clone target already exists: $target")
+    require(claimMetadata(target, version, mapper.writeValueAsString(src)),
+      s"concurrent writer created $target")
     cur
   }
 
+  /** EXPIRE SNAPSHOTS + physical cleanup: drop all but the last
+    * `retainLast` snapshots (the current one always survives) from the
+    * metadata — a new metadata version, claimed only when some snapshot
+    * expires — then delete the manifests and manifest lists only expired
+    * snapshots referenced, and every unreferenced data file under data/.
+    * Time travel to an expired snapshot fails loudly afterwards (its id
+    * is gone from the metadata); retained history and the current state
+    * are untouched. Returns the deleted file paths (with `dryRun`, the
+    * ones a real run would delete, touching nothing).
+    *
+    * The referenced set is the union over RETAINED snapshots of their
+    * manifest-list → manifest → `file_path` closure, all entry statuses
+    * included — a file marked DELETED in one retained snapshot can still
+    * be live in an older retained one, so only full absence makes a file
+    * reclaimable. Foreign files under the table root are left alone;
+    * orphans of failed or abandoned writes (their files land under data/
+    * before any commit claim, [[DataFileWriter]]) are reclaimed by the
+    * next call once older than `minFileAgeMs`, even when no snapshot
+    * expires.
+    * Metadata-only: O(manifests) driver reads, no data scanned. */
   def expireSnapshots(spark: SparkSession, table: String,
       retainLast: Int = 1, minFileAgeMs: Long = 24L * 3600 * 1000,
       dryRun: Boolean = false): Seq[String] = {
-    while (true) {
-      val base = currentVersion(table)
-      require(base > 0, s"not an Iceberg table: $table")
-      val metaPath = metaDir(table).resolve(s"v$base.metadata.json")
-      val meta = mapper.readTree(metaPath.toFile).asInstanceOf[
-        com.fasterxml.jackson.databind.node.ObjectNode]
+    // (retained snapshots, whether any expired)
+    val (kept, expiredAny) = editMetadata(table) { meta =>
       val current = meta.path("current-snapshot-id").asLong(-1L)
-      val logIds = meta.path("snapshot-log").elements().asScala
-        .map(_.path("snapshot-id").asLong(-1L)).toSeq.distinct
+      val log = meta.path("snapshot-log").elements().asScala.toSeq
       // named refs (tags/branches) protect their snapshots from expiration
       // — the spec's retention contract
       val refIds: Set[Long] = Option(meta.get("refs"))
         .map(_.elements().asScala.map(_.path("snapshot-id").asLong(-1L)).toSet)
         .getOrElse(Set.empty)
-      val keepIds = (logIds.takeRight(math.max(1, retainLast)) :+ current).toSet ++ refIds
-      val allSnaps = meta.path("snapshots").elements().asScala.toSeq
-      val (kept, expired) = allSnaps.partition(s => keepIds(s.path("snapshot-id").asLong(-1L)))
-      if (expired.isEmpty) return Seq.empty
+      val keepIds = (log.map(_.path("snapshot-id").asLong(-1L)).distinct
+        .takeRight(math.max(1, retainLast)) :+ current).toSet ++ refIds
+      def keptId(n: com.fasterxml.jackson.databind.JsonNode) =
+        keepIds(n.path("snapshot-id").asLong(-1L))
+      val (kept, expired) = meta.path("snapshots").elements().asScala.toSeq.partition(keptId)
+      if (expired.isEmpty || dryRun) Left((kept, expired.nonEmpty))
+      else {
+        // same table state, snapshots and log filtered
+        val snapsArr = meta.putArray("snapshots")
+        kept.foreach(snapsArr.add)
+        val logArr = meta.putArray("snapshot-log")
+        log.filter(keptId).foreach(logArr.add)
+        Right((kept, true))
+      }
+    }
 
-      // referenced closure of the RETAINED snapshots
-      def manifestsOf(snap: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
-        if (snap.has("manifest-list"))
-          IcebergRead.avroRecords(snap.path("manifest-list").asText())
-            .map(_.get("manifest_path").toString)
-        else snap.path("manifests").elements().asScala.map(_.asText()).toSeq
-      val keptLists = kept.flatMap(s =>
-        if (s.has("manifest-list")) Some(IcebergRead.localPath(s.path("manifest-list").asText()))
-        else None).toSet
-      val keptManifests = kept.flatMap(manifestsOf).map(IcebergRead.localPath).toSet
-      val referencedData = keptManifests.flatMap { mp =>
-        IcebergRead.avroRecords(mp).map { e =>
-          IcebergRead.localPath(e.get("data_file")
-            .asInstanceOf[org.apache.avro.generic.GenericRecord].get("file_path").toString)
+    // referenced closure of the RETAINED snapshots
+    def manifestsOf(snap: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
+      if (snap.has("manifest-list"))
+        IcebergRead.avroRecords(snap.path("manifest-list").asText())
+          .map(_.get("manifest_path").toString)
+      else snap.path("manifests").elements().asScala.map(_.asText()).toSeq
+    val keptLists = kept.flatMap(s =>
+      if (s.has("manifest-list")) Some(IcebergRead.localPath(s.path("manifest-list").asText()))
+      else None).toSet
+    val keptManifests = kept.flatMap(manifestsOf).map(IcebergRead.localPath).toSet
+    val referencedData = keptManifests.flatMap { mp =>
+      IcebergRead.avroRecords(mp).map { e =>
+        IcebergRead.localPath(e.get("data_file")
+          .asInstanceOf[org.apache.avro.generic.GenericRecord].get("file_path").toString)
+      }
+    }
+    def norm(f: java.io.File): String = IcebergRead.localPath(f.getAbsolutePath)
+    def listed(dir: java.nio.file.Path): Seq[java.io.File] =
+      Option(dir.toFile.listFiles()).map(_.toSeq).getOrElse(Nil)
+    // AGE GRACE (same rule as DeltaWrite.vacuum): a concurrent append
+    // writes data files under data/ BEFORE its metadata claim — fresh
+    // unreferenced files may be in-flight adds, not garbage
+    val cutoff = System.currentTimeMillis() - math.max(0L, minFileAgeMs)
+    val candidates = listed(dataDir(table)).filter(f => f.isFile &&
+        f.getName.endsWith(".parquet") && !referencedData(norm(f)) && f.lastModified() <= cutoff) ++
+      (if (!expiredAny) Nil else listed(metaDir(table)).filter { f =>
+        val n = f.getName
+        (n.startsWith("m-") || n.startsWith("snap-")) && n.endsWith(".avro") &&
+          !keptManifests(norm(f)) && !keptLists(norm(f))
+      })
+    if (dryRun) return candidates.map(_.getPath)
+    val reclaimed = candidates.map { f => val p = f.getPath; f.delete(); p }
+    // bloom sidecar GC rides the same pass, AFTER the data deletes:
+    // drop each blooms-*.json entry whose data file is GONE from disk
+    // (existence, not reference, is the test — an in-flight add's
+    // sidecar entry survives exactly like its staged file does under
+    // the age grace); an emptied sidecar file is deleted. Bounded
+    // metadata work, never touches data files.
+    listed(metaDir(table))
+      .filter(f => f.getName.startsWith("blooms-") && f.getName.endsWith(".json"))
+      .foreach { f =>
+        scala.util.Try {
+          val node = mapper.readTree(f).asInstanceOf[ObjectNode]
+          val dead = node.properties().asScala.map(_.getKey)
+            .filterNot(p => new java.io.File(IcebergRead.localPath(p)).exists())
+            .toSeq
+          if (dead.nonEmpty) {
+            dead.foreach(node.remove)
+            if (node.isEmpty) f.delete()
+            else Files.writeString(f.toPath, mapper.writeValueAsString(node))
+          }
         }
       }
-
-      // metadata rewrite: same table state, snapshots/log filtered
-      val newMeta = meta.deepCopy()
-      val snapsArr = newMeta.putArray("snapshots")
-      kept.foreach(s => snapsArr.add(s))
-      val logArr = newMeta.putArray("snapshot-log")
-      meta.path("snapshot-log").elements().asScala
-        .filter(e => keepIds(e.path("snapshot-id").asLong(-1L)))
-        .foreach(logArr.add)
-      newMeta.put("last-updated-ms", System.currentTimeMillis())
-      // DRY RUN: report what WOULD expire/delete without touching the
-      // metadata chain or any file (the age grace applies as in the
-      // real pass, so the report matches what a real run would reclaim)
-      if (dryRun) {
-        def normD(f: java.io.File): String = IcebergRead.localPath(f.getAbsolutePath)
-        val cutoffD = System.currentTimeMillis() - math.max(0L, minFileAgeMs)
-        val dataWould = Option(dataDir(table).toFile.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-            !referencedData(normD(f)) && f.lastModified() <= cutoffD)
-        val metaWould = Option(metaDir(table).toFile.listFiles()).getOrElse(Array.empty)
-          .filter { f =>
-            val n = f.getName
-            (n.startsWith("m-") || n.startsWith("snap-")) && n.endsWith(".avro") &&
-              !keptManifests(normD(f)) && !keptLists(normD(f))
-          }
-        return (dataWould ++ metaWould).map(_.getPath).toSeq
-      }
-      val tmp = Files.createTempFile(metaDir(table), "meta", ".tmp")
-      val won =
-        try {
-          Files.writeString(tmp, mapper.writeValueAsString(newMeta))
-          Files.createLink(metaDir(table).resolve(s"v${base + 1}.metadata.json"), tmp)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        } finally Files.delete(tmp)
-      if (won) {
-        Files.writeString(metaDir(table).resolve("version-hint.text"), (base + 1).toString)
-        def norm(f: java.io.File): String = IcebergRead.localPath(f.getAbsolutePath)
-        // AGE GRACE (same rule as DeltaWrite.vacuum): a concurrent append
-        // writes data files under data/ BEFORE its metadata claim —
-        // fresh unreferenced files may be in-flight adds, not garbage
-        val cutoff = System.currentTimeMillis() - math.max(0L, minFileAgeMs)
-        val dataDeleted = Option(dataDir(table).toFile.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-            !referencedData(norm(f)) && f.lastModified() <= cutoff)
-        val metaDeleted = Option(metaDir(table).toFile.listFiles()).getOrElse(Array.empty)
-          .filter { f =>
-            val n = f.getName
-            (n.startsWith("m-") || n.startsWith("snap-")) && n.endsWith(".avro") &&
-              !keptManifests(norm(f)) && !keptLists(norm(f))
-          }
-        val reclaimed =
-          (dataDeleted ++ metaDeleted).map { f => val p = f.getPath; f.delete(); p }.toSeq
-        // bloom sidecar GC rides the same pass, AFTER the data deletes:
-        // drop each blooms-*.json entry whose data file is GONE from disk
-        // (existence, not reference, is the test — an in-flight add's
-        // sidecar entry survives exactly like its staged file does under
-        // the age grace); an emptied sidecar file is deleted. Bounded
-        // metadata work, never touches data files.
-        Option(metaDir(table).toFile.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith("blooms-") && f.getName.endsWith(".json"))
-          .foreach { f =>
-            scala.util.Try {
-              val node = mapper.readTree(f)
-                .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-              val dead = node.properties().asScala.map(_.getKey)
-                .filterNot(p => new java.io.File(IcebergRead.localPath(p)).exists())
-                .toSeq
-              if (dead.nonEmpty) {
-                dead.foreach(node.remove)
-                if (node.isEmpty) f.delete()
-                else Files.writeString(f.toPath, mapper.writeValueAsString(node))
-              }
-            }
-          }
-        return reclaimed
-      }
-      // lost the claim to a concurrent commit: re-derive from the new base
-    }
-    Seq.empty // unreachable
+    reclaimed
   }
 
   /** The empty (partition-less) spec id delete manifests cite, minting one

@@ -1380,16 +1380,9 @@ object Lake {
         val v = DeltaWrite.compact(spark, path, smallFileBytes, targetFileBytes, zorderBy)
         // checkpoint when the replay tail (commits past the last
         // checkpoint) has grown beyond the cadence
-        val logDir = new org.apache.hadoop.fs.Path(s"${path.stripSuffix("/")}/_delta_log")
-        val lfs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val names: Array[String] =
-          if (!lfs.exists(logDir)) Array.empty
-          else lfs.listStatus(logDir).map(_.getPath.getName)
-        val lastCp = names.filter(_.endsWith(".checkpoint.parquet"))
-          .map(_.take(20).toLong).sorted.lastOption.getOrElse(-1L)
-        val tail = names.count(n => n.length == 25 && n.endsWith(".json") &&
-          n.take(20).forall(_.isDigit) && n.take(20).toLong > lastCp)
-        val doCp = tail >= checkpointEveryCommits
+        val log = DeltaRead.listLog(spark, path)
+        val lastCp = log.flatMap(_.checkpoints.lastOption).getOrElse(-1L)
+        val doCp = log.exists(_.versions.count(_ > lastCp) >= checkpointEveryCommits)
         if (doCp) DeltaWrite.checkpoint(spark, path)
         val reclaimed = DeltaWrite.vacuum(spark, path, retain, minFileAgeMs)
         Maintenance("delta", v != before, v, doCp, reclaimed.size)

@@ -317,6 +317,8 @@ class IngestSpec extends SparkSpec {
     val names = scala.jdk.CollectionConverters.IteratorHasAsScala(logFiles).asScala
       .map(_.getFileName.toString).filter(_.endsWith(".json")).toSeq.sorted
     assert(names === (0 until nCommits).map(v => f"$v%08d.json"))
+    // every claim cleaned up its temp file, won or lost
+    assert(new java.io.File(root, "_txn_log").list().filter(_.endsWith(".tmp")).isEmpty)
     // no lost appends: every appended path present exactly once
     val rows = cat.table().select($"raw_path", $"content_hash").as[(String, String)].collect()
     val appended = rows.filter(_._1.startsWith("app-")).map(_._1).sorted.toSeq

@@ -48,6 +48,19 @@ class ConstraintsSpec extends SparkSpec {
     DeltaWrite.addCheckConstraint(spark, t, "pos", "v > 0")
     assert(DeltaRead.snapshotInfo(spark, t)
       .configuration("delta.constraints.pos") === "v > 0")
+    val withProps = DeltaWrite.setProperties(spark, t, Map("graft.bloom.columns" -> "id"))
+    DeltaWrite.append(spark, Seq((2L, 2.0)).toDF("id", "v"), t)
+    // restore undoes the append; a checkpoint then becomes the replay base
+    DeltaWrite.restore(spark, t, withProps)
+    DeltaWrite.checkpoint(spark, t)
+    val conf = DeltaRead.snapshotInfo(spark, t).configuration
+    assert(conf.get("delta.constraints.pos").contains("v > 0"))
+    assert(conf.get("graft.bloom.columns").contains("id"))
+    val e = intercept[IllegalArgumentException] {
+      DeltaWrite.append(spark, Seq((3L, -7.0)).toDF("id", "v"), t)
+    }
+    assert(e.getMessage.contains("pos"))
+    assert(DeltaRead.snapshot(spark, t).select("id").as[Long].collect().toSeq === Seq(1L))
   }
 
   test("compact(where=...) rewrites ONLY the matching partitions") {

@@ -190,5 +190,19 @@ class DataFileWriterSpec extends SparkSpec {
     assert(expired.filter(_.endsWith(".parquet")).toSet === iceOrphans)
     assert(parquetUnder(it) === iceCommitted)
     assert(rows(IcebergRead.snapshot(spark, it)) === iceBefore)
+
+    // a single-snapshot table has nothing to expire; its orphans are
+    // reclaimed all the same, and no new metadata version is claimed
+    val one = tmp("graft_dfw_fail_ice1")
+    IcebergWrite.append(spark, good, one)
+    val oneCommitted = parquetUnder(one)
+    intercept[Exception](IcebergWrite.append(spark, bad, one))
+    val oneOrphans = parquetUnder(one) -- oneCommitted
+    assert(oneOrphans.nonEmpty, "the failed attempt should leave its partial file")
+    val metaBefore = new java.io.File(one, "metadata").list().toSet
+    assert(IcebergWrite.expireSnapshots(spark, one, minFileAgeMs = 0L).toSet === oneOrphans)
+    assert(parquetUnder(one) === oneCommitted)
+    assert(new java.io.File(one, "metadata").list().toSet === metaBefore)
+    assert(rows(IcebergRead.snapshot(spark, one)) === rows(good))
   }
 }

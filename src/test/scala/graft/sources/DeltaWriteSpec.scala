@@ -193,6 +193,13 @@ class DeltaWriteSpec extends SparkSpec {
     DeltaWrite.append(spark, Seq((2L, "b", "y")).toDF("id", "name", "grp"), table, Seq("grp"))
     val cpv = DeltaWrite.checkpoint(spark, table)
     assert(cpv === 1L)
+    // a second checkpoint at the same version is a no-op, and the staging
+    // of both leaves nothing behind in the log
+    assert(DeltaWrite.checkpoint(spark, table) === 1L)
+    val logNames = new java.io.File(table, "_delta_log").list().toSeq
+    assert(logNames.count(_.endsWith(".checkpoint.parquet")) === 1)
+    assert(logNames.sorted === Seq(f"${0L}%020d.json", f"${1L}%020d.checkpoint.parquet",
+      f"${1L}%020d.json", "_last_checkpoint"))
     // retention clean: drop version 0's JSON — checkpoint must cover it
     Files.delete(Paths.get(table, "_delta_log", f"${0L}%020d.json"))
     assert(rows(DeltaRead.snapshot(spark, table)).map(_._1) === Set(1L, 2L))
@@ -256,6 +263,8 @@ class DeltaWriteSpec extends SparkSpec {
     assert(snap.version === 8L) // 1 seed + 8 appends, gap-free
     assert(rows(DeltaRead.snapshot(spark, table)).map(_._1) ===
       Set(0L) ++ (1 to 4).flatMap(w => Seq(w * 10L, w * 10L + 1)).toSet)
+    // every claim cleaned up its temp file, won or lost
+    assert(new java.io.File(table, "_delta_log").list().filter(_.endsWith(".tmp")).isEmpty)
   }
 
   test("pctEncodePath / pctDecode round-trip any path segment") {

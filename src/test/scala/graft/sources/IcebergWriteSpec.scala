@@ -654,6 +654,28 @@ class IcebergWriteSpec extends SparkSpec {
     (1 to 5).foreach { v =>
       assert(Files.exists(Paths.get(table, "metadata", s"v$v.metadata.json")))
     }
+    // every claim cleaned up its temp file, won or lost
+    assert(new java.io.File(table, "metadata").list().filter(_.endsWith(".tmp")).isEmpty)
+  }
+
+  test("a stale, empty or missing version-hint hides no commit") {
+    val hint = (t: String) => Paths.get(t, "metadata", "version-hint.text")
+    Seq[(String, String => Unit)](
+      "stale" -> (t => Files.writeString(hint(t), "1")),
+      "empty" -> (t => Files.writeString(hint(t), "")),
+      "deleted" -> (t => Files.delete(hint(t)))
+    ).foreach { case (how, damage) =>
+      val table = Files.createTempDirectory(s"graft_iw_hint_$how").toString
+      IcebergWrite.append(spark, Seq((1L, "a")).toDF("id", "name"), table)
+      IcebergWrite.append(spark, Seq((2L, "b")).toDF("id", "name"), table)
+      damage(table)
+      assert(rows(IcebergRead.snapshot(spark, table)) === Set((1L, "a"), (2L, "b")), how)
+      IcebergWrite.append(spark, Seq((3L, "c")).toDF("id", "name"), table)
+      assert(Files.exists(Paths.get(table, "metadata", "v3.metadata.json")), how)
+      assert(!Files.exists(Paths.get(table, "metadata", "v4.metadata.json")), how)
+      assert(rows(IcebergRead.snapshot(spark, table)) ===
+        Set((1L, "a"), (2L, "b"), (3L, "c")), how)
+    }
   }
 
   test("schema evolution: fresh field ids under a new schema-id; old snapshots keep theirs") {
